@@ -3475,11 +3475,10 @@ def kg_triples_interleaved(spark, sf_dir):
     from recrun_spark.stage4 import assemble_triples
     _ensure_pkg(spark)
     docs = _entry_corpus(spark)
-    aliases = load_aliases(spark)
-    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
+    dictionary = canonicalize(load_aliases(spark))
     ex = extract_documents(docs)
-    linked = link_mentions(detect_mentions(ex, surfaces), aliases)
-    return assemble_triples(ex, linked, canonicalize(aliases))
+    linked = link_mentions(detect_mentions(ex, dictionary), dictionary)
+    return assemble_triples(ex, linked, dictionary.canonical)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

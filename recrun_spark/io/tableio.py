@@ -83,10 +83,18 @@ def write_table(df: DataFrame, path: str, partition_by=None,
         "wall_sec": round(time.time() - t0, 3),
         "complete": True,
     }
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1, default=str)
+    write_json(os.path.join(path, MANIFEST), manifest)
     return manifest
+
+
+def write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON via a temp file + rename, so a reader (or a
+    resume after a kill) never sees a half-written file."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1, default=str)
+    os.replace(tmp, path)
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_by, n_buckets: int,

@@ -1,15 +1,21 @@
 """End-to-end KG-construction pipeline with batch-level checkpoint/resume.
 
-``run_pipeline(spark, input_path, out_dir)`` executes:
+``run_pipeline(spark, input_path, out_dir)`` first compiles the alias
+dictionary once (``stage3.canonicalize`` -> ``Dictionary``), then executes:
 
   stage1_extract   documents → extractions            (zero-shuffle map)
   stage2_mentions  extractions → mentions → linked    (broadcast dict join)
-  stage3_canonical aliases → canonical map            (large/small-star CC)
-  stage4_triples   → deduped triples, partitioned by pred
+  stage3_canonical dictionary.canonical → table       (driver-local CC)
+  stage4_triples   → triples, partitioned by pred
 
 Each stage writes ``<out_dir>/<stage>/`` via TableIO with a ``_MANIFEST.json``
-completion marker; a re-run skips any stage whose manifest is complete
-(kill-and-resume reproduces identical triples — tests/test_stages_kg.py).
+completion marker carrying the stage's fingerprint: input file listing
+(path, size, mtime), ``Settings``, ``include_renders``, engine-source hash
+and, from stage 2 on, the dictionary digest.  A re-run skips a stage only
+if its manifest is complete with a matching fingerprint; otherwise that
+stage and every later one rebuild, so a resume never returns outputs of
+another input, dictionary or code version (tests/test_stages_kg.py).  The
+old manifest is removed before a stage's data is rewritten.
 
 CLI:  python -m recrun_spark.pipeline --input spans.parquet --out /tmp/kg
 """
@@ -17,13 +23,18 @@ CLI:  python -m recrun_spark.pipeline --input spans.parquet --out /tmp/kg
 from __future__ import annotations
 
 import argparse
+import functools
+import hashlib
 import json
 import os
+import pathlib
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io.tableio import read_manifest, read_table, write_table
+from .io.tableio import (MANIFEST, read_manifest, read_table, write_json,
+                         write_table)
+from .operators import release_caches
 from .readability import Settings
 from .stage1 import extract_documents
 from .stage2 import detect_mentions, link_mentions, load_aliases
@@ -34,17 +45,29 @@ STAGES = ("stage1_extract", "stage2_mentions", "stage3_canonical",
           "stage4_triples")
 
 
-def _stage(spark: SparkSession, out_dir: str, name: str, build,
-           partition_by=None, lineage_key: str = "doc_id",
-           force: bool = False) -> DataFrame:
-    path = os.path.join(out_dir, name)
-    m = None if force else read_manifest(path)
-    if m is not None:
-        return read_table(spark, path)
-    df = build()
-    write_table(df, path, partition_by=partition_by, stage=name,
-                lineage_key=lineage_key)
-    return read_table(spark, path)
+@functools.lru_cache(maxsize=None)
+def _code_digest() -> str:
+    """Hash of every engine source file (``recrun_spark/**/*.py``)."""
+    root = pathlib.Path(__file__).parent
+    h = hashlib.sha1()
+    for path in sorted(root.rglob("*.py")):
+        for b in (str(path.relative_to(root)).encode(), path.read_bytes()):
+            h.update(len(b).to_bytes(8, "big"))
+            h.update(b)
+    return h.hexdigest()
+
+
+def _input_digest(documents: DataFrame) -> str:
+    """Hash of the (path, size, mtime) listing of the files the scan reads,
+    stat'ed through the Hadoop filesystem of each path (no Spark job)."""
+    spark = documents.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    listing = []
+    for uri in sorted(documents.inputFiles()):
+        path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        listing.append([uri, st.getLen(), st.getModificationTime()])
+    return hashlib.sha1(json.dumps(listing).encode()).hexdigest()
 
 
 def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
@@ -55,39 +78,48 @@ def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     aliases = aliases_df if aliases_df is not None else load_aliases(spark)
-    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
+    dictionary = canonicalize(aliases)
 
     documents = spark.read.parquet(input_path)
+    extract_fp = {"input": _input_digest(documents),
+                  "settings": repr(settings or Settings.shipped()),
+                  "include_renders": include_renders,
+                  "code": _code_digest()}
+    fingerprint = {**extract_fp, "dictionary": dictionary.digest.hex()}
+    rebuild = force
 
-    extractions = _stage(
-        spark, out_dir, "stage1_extract",
+    def stage(name, build, fp=fingerprint, **write_kw) -> DataFrame:
+        nonlocal rebuild
+        path = os.path.join(out_dir, name)
+        m = None if rebuild else read_manifest(path)
+        if m is None or m.get("fingerprint") != fp:
+            rebuild = True  # every later stage reads this one's output
+            # drop the old manifest before the data changes: an Iceberg
+            # write leaves this directory alone, and a kill before the new
+            # manifest would otherwise leave the old one vouching for it
+            if os.path.exists(os.path.join(path, MANIFEST)):
+                os.remove(os.path.join(path, MANIFEST))
+            df = build()
+            m = write_table(df, path, stage=name, **write_kw)
+            write_json(os.path.join(path, MANIFEST), {**m, "fingerprint": fp})
+            release_caches(df)
+        return read_table(spark, path)
+
+    extractions = stage(
+        "stage1_extract",
         lambda: extract_documents(documents, settings,
                                   include_renders=include_renders),
-        force=force)
-
-    linked = _stage(
-        spark, out_dir, "stage2_mentions",
-        lambda: link_mentions(detect_mentions(extractions, surfaces), aliases),
-        force=force)
-
-    canonical = _stage(
-        spark, out_dir, "stage3_canonical",
-        lambda: canonicalize(aliases),
-        lineage_key="entity_id", force=force)
-
-    built4 = {}
-
-    def _build4():
-        df = assemble_triples(extractions, linked, canonical)
-        built4["df"] = df
-        return df
-
-    triples = _stage(
-        spark, out_dir, "stage4_triples", _build4,
-        partition_by=["pred"], force=force)
-    if built4.get("df") is not None:
-        from .operators import release_caches
-        release_caches(built4["df"])
+        fp=extract_fp)
+    linked = stage(
+        "stage2_mentions",
+        lambda: link_mentions(detect_mentions(extractions, dictionary),
+                              dictionary))
+    canonical = stage("stage3_canonical", lambda: dictionary.canonical,
+                      lineage_key="entity_id")
+    triples = stage(
+        "stage4_triples",
+        lambda: assemble_triples(extractions, linked, canonical),
+        partition_by=["pred"])
 
     # doc count comes from the stage-1 manifest lineage (one extraction row
     # per document) — NOT an upfront documents.count(), which would be a
@@ -98,10 +130,10 @@ def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
         "docs": (stage1_manifest or {}).get("rows"),
         "triples": triples.count(),
         "wall_sec": round(time.time() - t0, 3),
+        "fingerprint": fingerprint,
         "stages": {s: read_manifest(os.path.join(out_dir, s)) for s in STAGES},
     }
-    with open(os.path.join(out_dir, "_PIPELINE.json"), "w") as f:
-        json.dump(summary, f, indent=1, default=str)
+    write_json(os.path.join(out_dir, "_PIPELINE.json"), summary)
     return summary
 
 

@@ -48,11 +48,28 @@ def _prune_dead_process_dirs() -> None:
                 pass                     # alive, owned by someone else
 
 
+def _machine_heap() -> str:
+    """Driver heap for local mode: a quarter of the machine's memory (the
+    smaller of physical memory and the cgroup limit), 1-3 GB.  The JVM
+    shares the box with its Python workers and the page cache, and a
+    larger heap only delays GC until the kernel's OOM killer fires."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for limit in ("/sys/fs/cgroup/memory.max",                   # v2
+                  "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # v1
+        try:
+            with open(limit) as f:
+                mem = min(mem, int(f.read()))
+        except (OSError, ValueError):   # absent, or "max" (unlimited)
+            pass
+    return f"{max(1, min(3, int(mem / 2**30 // 4)))}g"
+
+
 def get_spark(app_name: str = "recrun_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         # 2x cores: enough tasks to rebalance, few enough to avoid tiny files
         shuffle_partitions = max(2 * cpus, 8)
@@ -69,10 +86,10 @@ def get_spark(app_name: str = "recrun_spark", cpus: int | None = None,
     external_master = os.environ.get("SPARK_MASTER") or _submit_master()
     if external_master is None:
         b = b.master(f"local[{cpus}]")
+        # local mode: the driver heap IS the executor heap
         b = b.config("spark.driver.memory",
-                     # local mode: driver heap IS the executor heap — size
-                     # it for 32 concurrent tasks buffering Arrow batches
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                     or _machine_heap())
     b = (b
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
          .config("spark.sql.adaptive.enabled", "true")

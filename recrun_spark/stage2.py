@@ -1,32 +1,32 @@
 """Stage 2 — batched mention detection + entity-link scoring.
 
-Inputs: stage-1 extractions (doc_id, retained_spans) + the alias dictionary
-(alias, entity_id, prior).
+Inputs: stage-1 extractions (doc_id, retained_spans) + the compiled
+``stage3.Dictionary`` (surfaces, digest, best link per alias, size class),
+built once per call by ``stage3.canonicalize``.
 
 Scale design:
 
 * **Mention detection stays a pure map** over extractions (Arrow
-  ``mapInPandas``): the compiled longest-match alias automaton is built once
-  per executor from a Spark *broadcast* of the alias surfaces (not shipped
-  per-batch, not a join against exploded token n-grams — at 10^12 docs an
-  n-gram explode would shuffle orders of magnitude more rows than it keeps).
-* **Entity-link scoring is a broadcast hash join** against the alias
-  dictionary (``F.broadcast``), then a ``max_by``-style argmax per mention
-  (max prior, ties → min entity_id) — all JVM-side.
+  ``mapInArrow``): the compiled longest-match alias automaton is built once
+  per worker from a Spark *broadcast* of the dictionary surfaces, cached
+  under the dictionary digest (not shipped per-batch, not a join against
+  exploded token n-grams — at 10^12 docs an n-gram explode would shuffle
+  orders of magnitude more rows than it keeps).
+* **Entity-link scoring is a broadcast hash join** against the
+  dictionary's best-link frame (``F.broadcast``) — the argmax per alias
+  (max prior, ties -> min entity_id) was reduced once on the dictionary
+  side, so the mention side is a single join, all JVM-side.
 * **Skew**: the head alias (>30% of mentions) is harmless under a broadcast
-  join (no shuffle by alias).  If the dictionary outgrows the broadcast
-  threshold, ``salted_join`` (operators.py) provides the repartition-join
-  path with key salting; stage2 switches when ``broadcast_limit`` is hit.
+  join (no shuffle by alias).  A dictionary past the broadcast limit
+  (``Dictionary.small`` false) takes ``salted_join`` (operators.py): the
+  repartition-join path with key salting.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections import OrderedDict
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
@@ -37,11 +37,12 @@ from .operators import salted_join
 
 # worker-local matcher cache: Python workers are reused across tasks
 # (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
-# once per worker process instead of once per task.  Keyed by a DIGEST of
-# the surface set (the key must not pin the full surface tuple of evicted
-# entries) and bounded by estimated FOOTPRINT, not entry count — a
-# 100k-surface trie is tens of MB, and N tries x many workers per node is
-# real memory at cluster scale.
+# once per worker process instead of once per task.  Keyed by the
+# dictionary DIGEST shipped with the task (stage3._row_digest — the key
+# must not pin the full surface tuple of evicted entries, and the worker
+# must not rehash the surfaces per task) and bounded by estimated
+# FOOTPRINT, not entry count — a 100k-surface trie is tens of MB, and N
+# tries x many workers per node is real memory at cluster scale.
 _PATTERN_CACHE: OrderedDict = OrderedDict()  # digest -> (pattern, est_bytes)
 _PATTERN_CACHE_MAX_BYTES = int(os.environ.get(
     "RECRUN_MATCHER_CACHE_BYTES", str(256 << 20)))
@@ -56,22 +57,7 @@ def _estimate_matcher_bytes(surfaces_tuple: tuple, pattern) -> int:
     return 4096 + chars * per_char
 
 
-def _surface_digest(surfaces_tuple: tuple) -> bytes:
-    """Injective digest of a surface tuple: each component is length-
-    prefixed before hashing, so no choice of surface contents (embedded
-    NULs, separator look-alikes) can make two distinct dictionaries
-    collide to one cache key — a collision would silently return the
-    WRONG matcher."""
-    h = hashlib.sha1()
-    for s in surfaces_tuple:
-        b = s.encode("utf-8")
-        h.update(len(b).to_bytes(4, "big"))
-        h.update(b)
-    return h.digest()
-
-
-def _cached_pattern(surfaces_tuple: tuple):
-    key = _surface_digest(surfaces_tuple)
+def _cached_pattern(key: bytes, surfaces_tuple: tuple):
     hit = _PATTERN_CACHE.pop(key, None)
     if hit is None:
         pattern = build_alias_pattern(surfaces_tuple)
@@ -101,14 +87,15 @@ ALIAS_SCHEMA = StructType([
 ])
 
 
-def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
+def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     """extractions(doc_id, retained_spans) -> mentions(MENTION_SCHEMA).
 
     Arrow-native map (``mapInArrow``): spans are read from the Arrow
-    buffers; the alias automaton is compiled once per task from the Spark
-    broadcast."""
+    buffers; the alias automaton for ``dictionary`` (a stage3.Dictionary)
+    is compiled once per worker from the Spark broadcast of its surfaces."""
     spark = extractions.sparkSession
-    bc = spark.sparkContext.broadcast(sorted(set(surfaces)))
+    bc = spark.sparkContext.broadcast(dictionary.surfaces)
+    key = dictionary.digest
 
     def fn(batches):
         import pyarrow as pa
@@ -117,7 +104,7 @@ def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
         out_schema = pa.schema([
             ("doc_id", pa.string()), ("surface", pa.string()),
             ("span_offset", pa.int32()), ("start", pa.int32())])
-        pattern = _cached_pattern(tuple(bc.value))  # built once per worker
+        pattern = _cached_pattern(key, bc.value)  # built once per worker
         for batch in batches:
             doc_ids, kinds, texts, _refs, offs, bounds = \
                 _unpack_spans_batch(batch, "retained_spans")
@@ -153,38 +140,22 @@ def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
     # partitions than the default parallelism — at production scale scans
     # carry many splits and this is a no-op, so the operator stays a pure
     # map there (guide §2.5: fix input skew right after the read).
-    try:
-        n_parts = src.rdd.getNumPartitions()
-        target = spark.sparkContext.defaultParallelism
-        if n_parts < target:
-            src = src.repartition(target)
-    except Exception:
-        pass
+    target = spark.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target)
     return src.mapInArrow(fn, schema=MENTION_SCHEMA)
 
 
-def link_mentions(mentions: DataFrame, aliases: DataFrame,
-                  broadcast_max_rows: int = 1_000_000,
+def link_mentions(mentions: DataFrame, dictionary,
                   salt_buckets: int = 16) -> DataFrame:
-    """Join mentions to the alias dictionary and pick the best candidate
-    per mention: max prior, ties -> min entity_id (linking.build_link_map).
+    """Join mentions to the dictionary's best link per alias (max prior,
+    ties -> min entity_id: linking.build_link_map), broadcast when the
+    dictionary is small, salted otherwise.
 
     Returns (doc_id, surface, span_offset, start, entity_id, prior).
     """
-    # argmax per alias is doc-independent: reduce the dictionary FIRST
-    # (|aliases| rows), not per-mention (|mentions| rows) — at 10^12 docs the
-    # dictionary-side reduction is free, the mention-side one is a shuffle.
-    # Window argmax (not max_by) for the deterministic tiebreak that matches
-    # linking.build_link_map: max prior, ties -> min entity_id.
-    from pyspark.sql import Window
-    w = (Window.partitionBy("alias")
-         .orderBy(F.col("prior").desc(), F.col("entity_id").asc()))
-    best = (aliases
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("alias", "entity_id", "prior"))
-
-    if _estimate_small(aliases, broadcast_max_rows):
+    best = dictionary.links
+    if dictionary.small:
         joined = mentions.join(F.broadcast(best),
                                mentions["surface"] == best["alias"], "inner")
     else:
@@ -192,14 +163,6 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame,
                              buckets=salt_buckets)
     return joined.select("doc_id", "surface", "span_offset", "start",
                          "entity_id", "prior")
-
-
-def _estimate_small(df: DataFrame, max_rows: int) -> bool:
-    # alias dictionaries are metadata-scale; a cheap bounded count suffices
-    try:
-        return df.limit(max_rows + 1).count() <= max_rows
-    except Exception:
-        return False
 
 
 def load_aliases(spark: SparkSession, rows=None, seed: int = 42) -> DataFrame:

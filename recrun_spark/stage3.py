@@ -1,25 +1,81 @@
-"""Stage 3 — entity canonicalization via connected components.
+"""Stage 3 — the dictionary stage: compile the alias dictionary once.
 
-Same-as edges (linking.same_as_edges rule: entities sharing an alias where
-both priors >= STRONG_PRIOR) are computed with a self-equi-join of the alias
-dictionary on ``alias``; components come from the iterative
-large-star/small-star loop in ``operators.connected_components``; canonical
-id = min entity_id per component.  Entities with no same-as edge map to
-themselves.
+The surface list, the best link per alias and the canonical map are pure
+functions of the alias dictionary, so ``canonicalize`` computes them once
+into a frozen ``Dictionary`` that stages 2 and 4 and all three KG entry
+points (``pipeline``, ``streaming.kg``, ``__spark_entry__``) share.
 
-Scale: the self-join shuffles on ``alias`` — the head alias is a skew key,
-so the join uses the salted path when the dictionary is large (AQE skew-join
-is the backstop at test scale).  Output is a small map (|entities| rows) —
-downstream stages consume it via broadcast join.
+* **driver path** (the rows fit ``broadcast_max_rows``): ONE probing
+  collect doubles as the transfer (the ``connected_components`` idiom);
+  surfaces, digest and canonical map come from those rows via
+  ``linking.canonical_map`` — the golden generator's function — and
+  ``canonical`` is a local frame that costs no Spark job;
+* **Spark path** (above the limit): a distinct surface collect, a digest
+  streamed over the sorted rows, same-as edges (entities sharing an alias
+  with both priors >= STRONG_PRIOR) from a self-equi-join on ``alias``,
+  and components from the large-star/small-star loop (Kiveris et al.,
+  SoCC 2014); stage 2 then takes the salted link join.
+
+Canonical id = min entity_id per component (entities with no same-as edge
+map to themselves); ``links`` is one window argmax (max prior, ties -> min
+entity_id, as ``linking.build_link_map``) on both paths, which the tests
+pin equal.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import hashlib
+import struct
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .fixtures.aliases import STRONG_PRIOR
+from .linking import canonical_map
 from .operators import connected_components
+
+CANONICAL_SCHEMA = StructType([
+    StructField("entity_id", StringType()),
+    StructField("canonical_id", StringType()),
+])
+
+
+@dataclass(frozen=True, eq=False)
+class Dictionary:
+    """The compiled alias dictionary.
+
+    * ``surfaces``: sorted distinct alias surfaces (the automaton's input);
+    * ``digest``: ``_row_digest`` of the sorted (alias, entity_id, prior)
+      rows — the worker matcher-cache key and the resume fingerprint;
+    * ``links``: (alias, entity_id, prior), the best candidate per alias;
+    * ``canonical``: (entity_id, canonical_id);
+    * ``small``: the rows fit the limit, so stage 2 broadcasts ``links``
+      (otherwise it takes the salted join).
+    """
+    surfaces: tuple
+    digest: bytes
+    links: DataFrame
+    canonical: DataFrame
+    small: bool
+
+
+def _row_digest(rows) -> bytes:
+    """Injective digest of (alias, entity_id, prior) rows in the given
+    order: each string is length-prefixed and each prior packed as an
+    8-byte double, so no choice of contents (embedded NULs, separator
+    look-alikes) makes two distinct dictionaries collide to one key — a
+    collision would hand a worker the WRONG matcher, or let a resume
+    reuse outputs built from another dictionary."""
+    h = hashlib.sha1()
+    for alias, entity_id, prior in rows:
+        for s in (alias, entity_id):
+            b = s.encode("utf-8")
+            h.update(len(b).to_bytes(4, "big"))
+            h.update(b)
+        h.update(struct.pack(">d", prior))
+    return h.digest()
 
 
 def same_as_edges_df(aliases: DataFrame,
@@ -34,14 +90,38 @@ def same_as_edges_df(aliases: DataFrame,
             .distinct())
 
 
-def canonicalize(aliases: DataFrame, max_iter: int = 50) -> DataFrame:
-    """aliases(alias, entity_id, prior) -> (entity_id, canonical_id)."""
-    edges = same_as_edges_df(aliases)
-    comp = connected_components(edges, "src", "dst", max_iter=max_iter)
-    entities = aliases.select(F.col("entity_id")).distinct()
-    return (entities
-            .join(comp.withColumnRenamed("node", "entity_id"),
-                  "entity_id", "left")
-            .select("entity_id",
-                    F.coalesce("component", "entity_id")
-                    .alias("canonical_id")))
+def canonicalize(aliases: DataFrame,
+                 broadcast_max_rows: int = 1_000_000) -> Dictionary:
+    """aliases(alias, entity_id, prior) -> Dictionary."""
+    rows = aliases.select("alias", "entity_id", "prior")
+    # argmax per alias is doc-independent: reduce the dictionary once
+    # (|aliases| rows), not per mention (|mentions| rows)
+    w = (Window.partitionBy("alias")
+         .orderBy(F.col("prior").desc(), F.col("entity_id").asc()))
+    links = (rows.withColumn("_rn", F.row_number().over(w))
+             .where(F.col("_rn") == 1).drop("_rn"))
+
+    # Arrow, not collect(): one job (collect() under a limit scans the
+    # partitions incrementally, a job per round)
+    t = rows.limit(broadcast_max_rows + 1).toArrow()
+    if t.num_rows <= broadcast_max_rows:
+        probe = sorted(zip(*(t.column(c).to_pylist() for c in rows.columns)))
+        canonical = aliases.sparkSession.createDataFrame(
+            sorted(canonical_map(probe).items()), CANONICAL_SCHEMA)
+        return Dictionary(surfaces=tuple(sorted({r[0] for r in probe})),
+                          digest=_row_digest(probe), links=links,
+                          canonical=canonical, small=True)
+
+    surfaces = tuple(sorted(
+        r["alias"] for r in aliases.select("alias").distinct().collect()))
+    digest = _row_digest(
+        rows.orderBy("alias", "entity_id", "prior").toLocalIterator())
+    comp = connected_components(same_as_edges_df(aliases), "src", "dst")
+    canonical = (aliases.select("entity_id").distinct()
+                 .join(comp.withColumnRenamed("node", "entity_id"),
+                       "entity_id", "left")
+                 .select("entity_id",
+                         F.coalesce("component", "entity_id")
+                         .alias("canonical_id")))
+    return Dictionary(surfaces=surfaces, digest=digest, links=links,
+                      canonical=canonical, small=False)

@@ -104,6 +104,6 @@ def assemble_triples(extractions: DataFrame, linked_mentions: DataFrame,
            .unionByName(illustrated)
            .unionByName(next_page))
     # expose the persisted intermediate so long-lived sessions can release
-    # it after materializing (pipeline.py and bench.py do)
+    # it after materializing (pipeline.py and streaming/kg.py do)
     out._recrun_ents = ents
     return out

@@ -12,8 +12,13 @@ SAME stage-1..4 operators as the batch pipeline inside ``foreachBatch``:
 * each batch writes to ``triples/batch=<id>/`` with mode=overwrite —
   idempotent per batchId, so a retried/re-executed batch cannot duplicate
   (the foreachBatch exactly-once recipe);
-* the alias dictionary and canonical map are computed once per run
-  (dictionary-scale, stage-3 fast path) and reused across batches;
+* the alias dictionary is compiled once per call, outside the batch
+  handler (``stage3.canonicalize`` -> ``Dictionary``: surfaces, best link
+  per alias, canonical map) and shared by every micro-batch of the call;
+* the dictionary digest is pinned beside ``_checkpoint`` on the first
+  call: earlier ``batch=<id>/`` outputs carry that dictionary's canonical
+  ids, so a later call with a different dictionary raises instead of
+  mixing two id spaces in one triples root;
 * re-running after new files land processes ONLY the new files (file-source
   checkpoint), the streaming counterpart of manifest-based resume.
 
@@ -45,6 +50,21 @@ from ..stage3 import canonicalize
 from ..stage4 import assemble_triples
 
 
+def _pin_dictionary(out_dir: str, digest: bytes) -> None:
+    path = os.path.join(out_dir, "_DICTIONARY")
+    if os.path.exists(path):
+        with open(path) as f:
+            pinned = f.read().strip()
+        if pinned != digest.hex():
+            raise ValueError(
+                f"{out_dir} holds triples built with dictionary {pinned}, "
+                f"not {digest.hex()}: use a fresh output directory")
+        return
+    os.makedirs(out_dir, exist_ok=True)
+    with open(path, "w") as f:
+        f.write(digest.hex())
+
+
 def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
                          aliases_df: DataFrame | None = None,
                          settings: Optional[Settings] = None,
@@ -52,15 +72,14 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
     """Drain available document files through the full KG flow; returns the
     triples root (one ``batch=<id>/`` parquet dir per processed batch)."""
     aliases = aliases_df if aliases_df is not None else load_aliases(spark)
-    surfaces = [r["alias"]
-                for r in aliases.select("alias").distinct().collect()]
-    canonical = canonicalize(aliases)
+    dictionary = canonicalize(aliases)
+    _pin_dictionary(out_dir, dictionary.digest)
     triples_root = os.path.join(out_dir, "triples")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         ex = extract_documents(batch_df, settings)
-        linked = link_mentions(detect_mentions(ex, surfaces), aliases)
-        trips = assemble_triples(ex, linked, canonical)
+        linked = link_mentions(detect_mentions(ex, dictionary), dictionary)
+        trips = assemble_triples(ex, linked, dictionary.canonical)
         (trips.write.mode("overwrite")
          .parquet(os.path.join(triples_root, f"batch={batch_id}")))
         release_caches(trips)

@@ -83,22 +83,29 @@ def test_near_dups_bucketed_recall_vs_exact(spark):
 def test_stage2_salted_path_equivalence(spark, corpus_parquet):
     """Forcing the salted repartition-join must produce byte-identical
     linking to the broadcast path (skew handling is a physical choice,
-    not a semantic one)."""
+    not a semantic one).  The broadcast side runs on the driver-built
+    Dictionary, the salted side on the Spark-built one
+    (``broadcast_max_rows=0``), so the two dictionary paths are checked
+    against each other too."""
     from recrun_spark.stage1 import extract_documents
     from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
+    from recrun_spark.stage3 import canonicalize
     docs = spark.read.parquet(corpus_parquet).limit(50)
     aliases = load_aliases(spark)
-    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
-    mentions = detect_mentions(extract_documents(docs), surfaces).persist()
+    driver = canonicalize(aliases)
+    distributed = canonicalize(aliases, broadcast_max_rows=0)
+    assert driver.small and not distributed.small
+    assert (driver.surfaces, driver.digest) == (distributed.surfaces,
+                                                distributed.digest)
+    ex = extract_documents(docs).persist()
     cols = ["doc_id", "surface", "span_offset", "start", "entity_id", "prior"]
-    broadcasted = sorted(map(tuple, link_mentions(mentions, aliases)
-                             .select(*cols).collect()))
-    salted = sorted(map(tuple, link_mentions(mentions, aliases,
-                                             broadcast_max_rows=0,
-                                             salt_buckets=7)
-                        .select(*cols).collect()))
+    broadcasted = sorted(map(tuple, link_mentions(
+        detect_mentions(ex, driver), driver).select(*cols).collect()))
+    salted = sorted(map(tuple, link_mentions(
+        detect_mentions(ex, distributed), distributed, salt_buckets=7)
+        .select(*cols).collect()))
     assert broadcasted == salted and len(broadcasted) > 0
-    mentions.unpersist()
+    ex.unpersist()
 
 
 def test_head_alias_skew_share(spark, corpus_parquet):
@@ -106,12 +113,13 @@ def test_head_alias_skew_share(spark, corpus_parquet):
     mentions — the skew the salted join / AQE skew handling is sized for."""
     from pyspark.sql import functions as F
 
-    from recrun_spark.fixtures.aliases import head_alias, make_aliases
+    from recrun_spark.fixtures.aliases import head_alias
     from recrun_spark.stage1 import extract_documents
-    from recrun_spark.stage2 import detect_mentions
-    surfaces = sorted({r[0] for r in make_aliases(42)})
+    from recrun_spark.stage2 import detect_mentions, load_aliases
+    from recrun_spark.stage3 import canonicalize
     docs = spark.read.parquet(corpus_parquet)
-    mentions = detect_mentions(extract_documents(docs), surfaces)
+    mentions = detect_mentions(extract_documents(docs),
+                               canonicalize(load_aliases(spark)))
     head = head_alias()
     # exact equality: startswith would also count 'orion dynamics' etc. —
     # distinct join keys — overstating the single hot key's share
@@ -227,14 +235,14 @@ def test_matcher_cache_bounded_by_bytes(monkeypatch):
     monkeypatch.setattr(stage2, "_PATTERN_CACHE", type(stage2._PATTERN_CACHE)())
     big = tuple(sorted(f"syn{i:05d}entity" for i in range(100_000)))
     small = ("alpha", "beta")
-    m_big = stage2._cached_pattern(big)
-    assert stage2._cached_pattern(big) is m_big          # cache hit
+    m_big = stage2._cached_pattern(b"big", big)
+    assert stage2._cached_pattern(b"big", big) is m_big  # cache hit
     assert len(stage2._PATTERN_CACHE) == 1
     est = next(iter(stage2._PATTERN_CACHE.values()))[1]
     assert est > (1 << 20)          # over budget -> cached alone, evictable
-    stage2._cached_pattern(small)
+    stage2._cached_pattern(b"small", small)
     assert len(stage2._PATTERN_CACHE) == 1               # big one evicted
-    m_big2 = stage2._cached_pattern(big)                 # rebuilt, not stale
+    m_big2 = stage2._cached_pattern(b"big", big)         # rebuilt, not stale
     assert m_big2 is not m_big
 
 
@@ -477,13 +485,26 @@ def test_asof_join_null_timestamps(spark):
 
 
 def test_stage2_surface_digest_injective():
-    """ADVICE r03 fix: the worker matcher-cache key must be injective over
-    surface tuples — a NUL inside a surface used to collide ('a\\x00b',)
-    with ('a', 'b') and silently return the wrong matcher."""
-    from recrun_spark.stage2 import _surface_digest
-    assert _surface_digest(("a\x00b",)) != _surface_digest(("a", "b"))
-    assert _surface_digest(("ab", "c")) != _surface_digest(("a", "bc"))
-    assert _surface_digest(("x",)) == _surface_digest(("x",))
+    """The worker matcher-cache key and the resume fingerprint must be
+    injective over dictionaries — a NUL inside a surface used to collide
+    ('a\\x00b',) with ('a', 'b') and silently return the wrong matcher.
+    The row digest covers every component: alias, entity_id and prior."""
+    from recrun_spark.stage3 import _row_digest
+
+    def d(*rows):
+        return _row_digest(rows)
+
+    # alias
+    assert d(("a\x00b", "Q1", 0.9)) != d(("a", "b\x00Q1", 0.9))
+    assert d(("ab", "c", 0.9)) != d(("a", "bc", 0.9))
+    # entity_id
+    assert d(("a", "Q1", 0.9)) != d(("a", "Q2", 0.9))
+    assert d(("a", "Q1\x00", 0.9)) != d(("a", "Q1", 0.9))
+    # prior
+    assert d(("a", "Q1", 0.9)) != d(("a", "Q1", 0.95))
+    # row boundaries
+    assert d(("a", "Q1", 0.5), ("b", "Q2", 0.5)) != d(("a", "Q1", 0.5))
+    assert d(("x", "Q1", 0.9)) == d(("x", "Q1", 0.9))
 
 
 def test_minhash_lsh_materialize_flag(spark):

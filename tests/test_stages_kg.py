@@ -56,16 +56,49 @@ def test_connected_components_vs_union_find(spark):
         assert got == want, kwargs
 
 
+def _random_dictionary(seed=3):
+    """A dictionary with prior ties (three prior levels, several entities
+    per alias, duplicate rows) and multi-hop same-as chains: ten chains of
+    six entities in shuffled id order, consecutive ones sharing a strong
+    alias, so the min label sits mid-chain and must travel several hops."""
+    rng = random.Random(seed)
+    ents = [f"E{i:03d}" for i in range(60)]
+    order = ents[:]
+    rng.shuffle(order)
+    rows = []
+    for c in range(0, 60, 6):
+        chain = order[c:c + 6]
+        for a, b in zip(chain, chain[1:]):
+            rows += [(f"hop {a} {b}", a, 0.8), (f"hop {a} {b}", b, 0.9)]
+    surfaces = [f"alias{i}" for i in range(25)]
+    rows += [(rng.choice(surfaces), rng.choice(ents),
+              rng.choice((0.5, 0.8, 0.9))) for _ in range(150)]
+    return rows
+
+
 def test_canonicalize_matches_golden(spark):
+    """Both Dictionary paths — built on the driver (the default at this
+    size) and in Spark (``broadcast_max_rows=0``) — equal the single-node
+    linking rules on the fixture dictionary and on a random one."""
     from recrun_spark.fixtures.aliases import make_aliases
-    from recrun_spark.linking import canonical_map
+    from recrun_spark.linking import build_link_map, canonical_map
     from recrun_spark.stage2 import load_aliases
     from recrun_spark.stage3 import canonicalize
-    rows = make_aliases(42)
-    golden = canonical_map(rows)
-    got = {r["entity_id"]: r["canonical_id"]
-           for r in canonicalize(load_aliases(spark, rows)).collect()}
-    assert got == golden
+    for rows in (make_aliases(42), _random_dictionary()):
+        aliases = load_aliases(spark, rows)
+        digests = set()
+        for limit in (1_000_000, 0):
+            d = canonicalize(aliases, broadcast_max_rows=limit)
+            assert d.small == (limit > 0)
+            assert d.surfaces == tuple(sorted({r[0] for r in rows}))
+            assert {r["entity_id"]: r["canonical_id"]
+                    for r in d.canonical.collect()} == canonical_map(rows)
+            links = d.links.collect()
+            assert len(links) == len(d.surfaces)
+            assert {r["alias"]: r["entity_id"]
+                    for r in links} == build_link_map(rows)
+            digests.add(d.digest)
+        assert len(digests) == 1
 
 
 def test_salted_join_equivalence(spark):
@@ -138,3 +171,107 @@ def test_triples_partitioned_by_pred(pipeline_out):
     assert {p["pred"] for p in manifest["partitions"]} == {
         "co_mentioned_with", "illustrated_by", "mentioned_in",
         "next_page_of"}
+
+
+# --- resume fingerprints: a resume never returns another input's,
+# dictionary's or code version's outputs ---------------------------------
+
+class Killed(Exception):
+    pass
+
+
+def _written_triples(spark, out):
+    return {tuple(r) for r in
+            spark.read.parquet(os.path.join(out, "stage4_triples"))
+            .select("subj", "pred", "obj", "doc_id").collect()}
+
+
+@pytest.fixture(scope="module")
+def two_inputs(spark, tmp_path_factory):
+    """Two disjoint 30-doc inputs A and B, and B's triples from a fresh
+    output directory."""
+    import pyarrow.parquet as pq
+
+    from recrun_spark.fixtures.generator import corpus_to_arrow, make_corpus
+    from recrun_spark.pipeline import run_pipeline
+    d = tmp_path_factory.mktemp("inputs")
+    corpus = make_corpus(60)
+    a, b = str(d / "a.parquet"), str(d / "b.parquet")
+    pq.write_table(corpus_to_arrow(corpus[:30]), a)
+    pq.write_table(corpus_to_arrow(corpus[30:]), b)
+    run_pipeline(spark, b, str(d / "fresh_b"))
+    return a, b, _written_triples(spark, str(d / "fresh_b"))
+
+
+def test_resume_rebuilds_for_another_input(spark, two_inputs, tmp_path):
+    from recrun_spark.pipeline import run_pipeline
+    a, b, expect_b = two_inputs
+    out = str(tmp_path / "out")
+    run_pipeline(spark, a, out)
+    summary = run_pipeline(spark, b, out)
+    assert _written_triples(spark, out) == expect_b
+    assert summary["triples"] == len(expect_b)
+
+
+def test_changed_dictionary_rebuilds_or_raises(spark, two_inputs, tmp_path):
+    """Batch: a changed dictionary keeps stage 1 and rebuilds stage 2 on.
+    Incremental: earlier batches carry the old canonical ids, so a changed
+    dictionary raises."""
+    import shutil
+
+    from recrun_spark.fixtures.aliases import head_alias, make_aliases
+    from recrun_spark.pipeline import run_pipeline
+    from recrun_spark.stage2 import load_aliases
+    from recrun_spark.streaming.kg import run_kg_available_now
+    a, b, expect_b = two_inputs
+    changed = [r for r in make_aliases(42) if r[0] != head_alias()]
+    fresh = str(tmp_path / "fresh")
+    run_pipeline(spark, b, fresh, aliases_df=load_aliases(spark, changed))
+    expect_changed = _written_triples(spark, fresh)
+    assert expect_changed != expect_b
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, b, out)
+    stage1_manifest = os.path.join(out, "stage1_extract", "_MANIFEST.json")
+    before = os.stat(stage1_manifest).st_mtime_ns
+    run_pipeline(spark, b, out, aliases_df=load_aliases(spark, changed))
+    assert _written_triples(spark, out) == expect_changed
+    assert os.stat(stage1_manifest).st_mtime_ns == before
+
+    src = str(tmp_path / "landing")
+    os.makedirs(src)
+    shutil.copy(b, os.path.join(src, "part-0.parquet"))
+    stream_out = str(tmp_path / "stream")
+    run_kg_available_now(spark, src, stream_out)
+    run_kg_available_now(spark, src, stream_out)  # same dictionary: fine
+    with pytest.raises(ValueError, match="dictionary"):
+        run_kg_available_now(spark, src, stream_out,
+                             aliases_df=load_aliases(spark, changed))
+
+
+def test_resume_after_kill_between_data_and_manifest(spark, two_inputs,
+                                                     tmp_path, monkeypatch):
+    """A kill after a stage's data is rewritten but before its manifest is
+    leaves no manifest behind — not the previous run's — so the resume
+    rebuilds that stage instead of trusting data of another input."""
+    from recrun_spark import pipeline
+    from recrun_spark.io.tableio import read_manifest
+    a, b, expect_b = two_inputs
+    out = str(tmp_path / "out")
+    pipeline.run_pipeline(spark, a, out)
+
+    real = pipeline.write_table
+
+    def killed(df, path, stage="", **kw):
+        if stage != "stage2_mentions":
+            return real(df, path, stage=stage, **kw)
+        df.write.mode("overwrite").parquet(path)
+        raise Killed
+
+    monkeypatch.setattr(pipeline, "write_table", killed)
+    with pytest.raises(Killed):
+        pipeline.run_pipeline(spark, b, out)
+    monkeypatch.undo()
+    assert read_manifest(os.path.join(out, "stage2_mentions")) is None
+    pipeline.run_pipeline(spark, b, out)
+    assert _written_triples(spark, out) == expect_b

@@ -230,13 +230,11 @@ def test_incremental_kg_late_out_of_order_arrival(spark, tmpdir_path):
     docs_path = os.path.join(tmpdir_path, "all60.parquet")
     pq.write_table(corpus_to_arrow(corpus), docs_path)
     docs = spark.read.parquet(docs_path)
-    aliases = load_aliases(spark)
-    surfaces = [r["alias"]
-                for r in aliases.select("alias").distinct().collect()]
+    dictionary = canonicalize(load_aliases(spark))
     ex = extract_documents(docs)
-    linked = link_mentions(detect_mentions(ex, surfaces), aliases)
+    linked = link_mentions(detect_mentions(ex, dictionary), dictionary)
     expect = {(r["subj"], r["pred"], r["obj"], r["doc_id"]) for r in
-              assemble_triples(ex, linked, canonicalize(aliases)).collect()}
+              assemble_triples(ex, linked, dictionary.canonical).collect()}
     assert set(got) == expect and len(expect) > 0
 
     # nothing new -> no new batches
@@ -280,12 +278,10 @@ def test_incremental_kg_stream_equals_batch(spark, tmpdir_path):
         docs_path = os.path.join(tmpdir_path, f"all_{n_docs}.parquet")
         pq.write_table(corpus_to_arrow(corpus[:n_docs]), docs_path)
         docs = spark.read.parquet(docs_path)
-        aliases = load_aliases(spark)
-        surfaces = [r["alias"]
-                    for r in aliases.select("alias").distinct().collect()]
+        dictionary = canonicalize(load_aliases(spark))
         ex = extract_documents(docs)
-        linked = link_mentions(detect_mentions(ex, surfaces), aliases)
-        return triple_set(assemble_triples(ex, linked, canonicalize(aliases)))
+        linked = link_mentions(detect_mentions(ex, dictionary), dictionary)
+        return triple_set(assemble_triples(ex, linked, dictionary.canonical))
 
     got60 = triple_set(spark.read.parquet(os.path.join(root, "batch=*")))
     assert got60 == batch_triples(60) and len(got60) > 0

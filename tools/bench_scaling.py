@@ -20,7 +20,9 @@ import statistics
 import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TOOLS)
+CACHE = os.path.join(REPO, ".bench_cache")
 
 CHILD = r"""
 import json, statistics, sys, time
@@ -48,16 +50,16 @@ def run_extract():
 
 
 def run_pipeline():
-    # the full in-memory KG pipeline (same shape as bench.kg_full_pipeline)
+    # the full in-memory KG pipeline: extract -> link -> canonicalize ->
+    # triples, without the stage-table writes of pipeline.run_pipeline
     from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
     from recrun_spark.stage3 import canonicalize
     from recrun_spark.stage4 import assemble_triples
-    aliases = load_aliases(spark)
-    surfaces = [r["alias"]
-                for r in aliases.select("alias").distinct().collect()]
+    dictionary = canonicalize(load_aliases(spark))
     ex = extract_documents(docs).persist()
-    linked = link_mentions(detect_mentions(ex, surfaces), aliases).persist()
-    trips = assemble_triples(ex, linked, canonicalize(aliases))
+    linked = link_mentions(detect_mentions(ex, dictionary),
+                           dictionary).persist()
+    trips = assemble_triples(ex, linked, dictionary.canonical)
     n = trips.count()
     ex.unpersist(); linked.unpersist()
     from recrun_spark.operators import release_caches
@@ -89,44 +91,75 @@ print(json.dumps({{"cpus": cpus, "n": n, "runs": ds,
 
 
 def ensure_corpus(n_docs: int) -> str:
+    """The fixture corpus (``fixtures.generator``, the tests' seed),
+    written once under .bench_cache/ in 1,000-doc files."""
+    import pyarrow.parquet as pq
     sys.path.insert(0, REPO)
-    from recrun_spark.fixtures.generator import GEN_VERSION
-    path = os.path.join(REPO, ".bench_cache", f"corpus_v{GEN_VERSION}_{n_docs}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    env = dict(os.environ, RECRUN_BENCH_DOCS=str(n_docs),
-               PYTHONPATH=REPO)
-    code = (f"import sys; sys.path.insert(0, {REPO!r});\n"
-            "from recrun_spark.session import get_spark\n"
-            "import bench\n"
-            "bench.ensure_corpus(get_spark('gen', cpus=32))\n")
-    subprocess.run([sys.executable, "-c", code], check=True, env=env,
-                   cwd=REPO)
+    from recrun_spark.fixtures.aliases import head_alias, make_aliases
+    from recrun_spark.fixtures.generator import (GEN_VERSION, corpus_to_arrow,
+                                                 make_doc)
+    path = os.path.join(CACHE, f"corpus_v{GEN_VERSION}_{n_docs}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        os.makedirs(path, exist_ok=True)
+        surfaces = sorted({r[0] for r in make_aliases(42)})
+        for k in range(0, n_docs, 1000):
+            chunk = [(f"doc{ix:06d}", make_doc(ix, 42, surfaces, head_alias()))
+                     for ix in range(k, min(n_docs, k + 1000))]
+            pq.write_table(corpus_to_arrow(chunk),
+                           os.path.join(path, f"part-{k // 1000:05d}.parquet"))
+        open(os.path.join(path, "_SUCCESS"), "w").close()
     return path
 
 
 def ensure_dedup_corpus(n_docs: int, mega: int | None = None) -> str:
-    """The dedup corpus (bench.ensure_dedup_skew_corpus).  ``mega`` is
-    the near-duplicate mega-cluster size: the 15% default mirrors the
-    bench's adversarial skew entry; pass a small value (e.g. 100) for
-    the near-uniform corpus the SCALING measurement wants — the hot
-    band-bucket's candidate expansion is deliberately skewed work, which
-    measures the adversary, not the operator's parallelizability."""
-    sys.path.insert(0, REPO)
+    """The dedup corpus (``write_dedup_corpus``).  ``mega`` is the
+    near-duplicate mega-cluster size: the 15% default is the adversarial
+    skew; pass a small value (e.g. 100) for the near-uniform corpus the
+    SCALING measurement wants — the hot band-bucket's candidate expansion
+    is deliberately skewed work, which measures the adversary, not the
+    operator's parallelizability."""
     if mega is None:
         mega = max(100, (n_docs * 3) // 20)
-    path = os.path.join(REPO, ".bench_cache",
-                        f"dedup_skew_{n_docs}_{mega}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    code = (f"import sys; sys.path.insert(0, {REPO!r})\n"
-            "from recrun_spark.session import get_spark\n"
-            "import bench\n"
-            f"bench.ensure_dedup_skew_corpus(get_spark('gen', cpus=32), "
-            f"n_docs={n_docs}, mega={mega})\n")
-    subprocess.run([sys.executable, "-c", code], check=True,
-                   env=dict(os.environ, PYTHONPATH=REPO), cwd=REPO)
+    path = os.path.join(CACHE, f"dedup_skew_{n_docs}_{mega}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        # in a child process, so the generating JVM is gone before any
+        # level is timed
+        code = (f"import sys; sys.path[:0] = [{REPO!r}, {TOOLS!r}]\n"
+                "from recrun_spark.session import get_spark\n"
+                "import bench_scaling\n"
+                "bench_scaling.write_dedup_corpus(get_spark('gen'), "
+                f"{path!r}, {n_docs}, {mega})\n")
+        subprocess.run([sys.executable, "-c", code], check=True,
+                       env=dict(os.environ, PYTHONPATH=REPO), cwd=REPO)
     return path
+
+
+def write_dedup_corpus(spark, path: str, n_docs: int, mega: int) -> None:
+    """Deterministic corpus with one MEGA near-duplicate cluster: ``mega``
+    docs share a 60-word boilerplate template (7 suffix variants), the
+    rest are all-unique.  Stresses the df-cut (the template shingles blow
+    past max_shingle_freq and must be cut), the LSH banding under
+    near-identical signatures (a hot band bucket), and the distributed CC
+    path under a hot component (~mega²/2·(1/7) edges ≫ the 200k
+    driver-local threshold).  Pure SQL expressions — no Python row loop."""
+    from pyspark.sql import functions as F
+    tpl = " ".join(f"boilerplate{j:02d}word" for j in range(60))
+    df = spark.range(n_docs).select(
+        F.concat(F.lit("doc"), F.lpad(F.col("id").cast("string"), 6, "0")
+                 ).alias("doc_id"),
+        F.when(
+            F.col("id") < mega,
+            F.concat(F.lit(tpl + " variant"),
+                     (F.col("id") % 7).cast("string"),
+                     F.lit("a variant"), (F.col("id") % 7).cast("string"),
+                     F.lit("b"))
+        ).otherwise(
+            F.concat_ws(" ", F.transform(
+                F.sequence(F.lit(0), F.lit(29)),
+                lambda j: F.concat(F.lit("u"), F.col("id").cast("string"),
+                                   F.lit("w"), j.cast("string"))))
+        ).alias("text"))
+    df.repartition(32).write.mode("overwrite").parquet(path)
 
 
 QUIET_LOAD = float(os.environ.get("RECRUN_SCALING_QUIET_LOAD", "1.5"))
@@ -167,7 +200,7 @@ def main():
                     default="extract")
     ap.add_argument("--dedup-mega", type=int, default=None,
                     help="mega-cluster size for --job dedup (default: the "
-                         "bench's 15%% adversarial share; use ~100 for the "
+                         "15%% adversarial share; use ~100 for the "
                          "near-uniform scaling corpus)")
     args = ap.parse_args()
 

@@ -97,10 +97,11 @@ def main():
 
     # 4. stage-2 link join: alias dictionary must broadcast
     from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
+    from recrun_spark.stage3 import canonicalize
     aliases = load_aliases(spark)
-    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
-    linked = link_mentions(detect_mentions(extract_documents(docs), surfaces),
-                           aliases)
+    dictionary = canonicalize(aliases)
+    linked = link_mentions(detect_mentions(extract_documents(docs), dictionary),
+                           dictionary)
     audit("stage2_link_mentions", linked, [
         ("alias dictionary broadcast (no shuffle of the mention side)",
          lambda p: "BroadcastHashJoin" in p),
@@ -282,9 +283,10 @@ def main():
     if not os.path.exists(tmp_skew):
         write_corpus_parquet(tmp_skew, 60, skew=True)
     docs_skew = spark.read.parquet(tmp_skew)
+    salted_dictionary = canonicalize(aliases, broadcast_max_rows=0)
     linked_salted = link_mentions(
-        detect_mentions(extract_documents(docs_skew), surfaces), aliases,
-        broadcast_max_rows=0, salt_buckets=8)
+        detect_mentions(extract_documents(docs_skew), salted_dictionary),
+        salted_dictionary, salt_buckets=8)
     audit("stage2_link_mentions_salted_skew", linked_salted, [
         ("salted join keys", lambda p: "_salt" in p),
         ("no single-reducer exchange",
