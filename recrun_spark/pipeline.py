@@ -1,21 +1,18 @@
 """End-to-end KG-construction pipeline with batch-level checkpoint/resume.
 
-``run_pipeline(spark, input_path, out_dir)`` first compiles the alias
-dictionary once (``stage3.canonicalize`` -> ``Dictionary``), then executes:
+``run_pipeline(spark, input_path, out_dir)`` compiles the alias dictionary
+once (``stage3.canonicalize``), then executes:
 
   stage1_extract   documents → extractions            (zero-shuffle map)
   stage2_mentions  extractions → mentions → linked    (broadcast dict join)
-  stage3_canonical dictionary.canonical → table       (driver-local CC)
+  stage3_canonical dictionary.canonical → table
   stage4_triples   → triples, partitioned by pred
 
 Each stage writes ``<out_dir>/<stage>/`` via TableIO with a ``_MANIFEST.json``
-completion marker carrying the stage's fingerprint: input file listing
-(path, size, mtime), ``Settings``, ``include_renders``, engine-source hash
-and, from stage 2 on, the dictionary digest.  A re-run skips a stage only
-if its manifest is complete with a matching fingerprint; otherwise that
-stage and every later one rebuild, so a resume never returns outputs of
-another input, dictionary or code version (tests/test_stages_kg.py).  The
-old manifest is removed before a stage's data is rewritten.
+completion marker and a fingerprint of what built it (input files, settings,
+dictionary, engine sources); a re-run skips a stage only while its
+fingerprint matches, else rebuilds it and every later stage
+(tests/test_stages_kg.py).
 
 CLI:  python -m recrun_spark.pipeline --input spans.parquet --out /tmp/kg
 """
@@ -25,9 +22,9 @@ from __future__ import annotations
 import argparse
 import functools
 import hashlib
+import importlib.resources
 import json
 import os
-import pathlib
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,11 +44,23 @@ STAGES = ("stage1_extract", "stage2_mentions", "stage3_canonical",
 
 @functools.lru_cache(maxsize=None)
 def _code_digest() -> str:
-    """Hash of every engine source file (``recrun_spark/**/*.py``)."""
-    root = pathlib.Path(__file__).parent
+    """Hash of every engine source file (``recrun_spark/**/*.py``), read
+    through the package loader, so a zipped package (``--py-files``)
+    hashes its members too."""
+    def sources(node, prefix=""):
+        for child in node.iterdir():
+            name = prefix + child.name
+            if child.is_dir():
+                yield from sources(child, name + "/")
+            elif name.endswith(".py"):
+                yield name, child.read_bytes()
+
+    files = sorted(sources(importlib.resources.files(__package__)))
+    if not files:
+        raise RuntimeError(f"no {__package__} sources to fingerprint")
     h = hashlib.sha1()
-    for path in sorted(root.rglob("*.py")):
-        for b in (str(path.relative_to(root)).encode(), path.read_bytes()):
+    for name, data in files:
+        for b in (name.encode(), data):
             h.update(len(b).to_bytes(8, "big"))
             h.update(b)
     return h.hexdigest()

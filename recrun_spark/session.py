@@ -52,7 +52,9 @@ def _machine_heap() -> str:
     """Driver heap for local mode: a quarter of the machine's memory (the
     smaller of physical memory and the cgroup limit), 1-3 GB.  The JVM
     shares the box with its Python workers and the page cache, and a
-    larger heap only delays GC until the kernel's OOM killer fires."""
+    larger heap only delays GC until the kernel's OOM killer fires.  The
+    3 GB cap has been exercised on 4 cores only; on a larger machine set
+    SPARK_GRAFT_DRIVER_MEM."""
     mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     for limit in ("/sys/fs/cgroup/memory.max",                   # v2
                   "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # v1

@@ -1,25 +1,20 @@
 """Stage 2 — batched mention detection + entity-link scoring.
 
-Inputs: stage-1 extractions (doc_id, retained_spans) + the compiled
-``stage3.Dictionary`` (surfaces, digest, best link per alias, size class),
-built once per call by ``stage3.canonicalize``.
+Inputs: stage-1 extractions (doc_id, retained_spans) + the compiled alias
+dictionary (``stage3.Dictionary``).
 
 Scale design:
 
 * **Mention detection stays a pure map** over extractions (Arrow
   ``mapInArrow``): the compiled longest-match alias automaton is built once
-  per worker from a Spark *broadcast* of the dictionary surfaces, cached
-  under the dictionary digest (not shipped per-batch, not a join against
-  exploded token n-grams — at 10^12 docs an n-gram explode would shuffle
-  orders of magnitude more rows than it keeps).
+  per worker from a Spark *broadcast* of the alias surfaces (not shipped
+  per-batch, not a join against exploded token n-grams — at 10^12 docs an
+  n-gram explode would shuffle orders of magnitude more rows than it keeps).
 * **Entity-link scoring is a broadcast hash join** against the
-  dictionary's best-link frame (``F.broadcast``) — the argmax per alias
-  (max prior, ties -> min entity_id) was reduced once on the dictionary
-  side, so the mention side is a single join, all JVM-side.
+  dictionary's best link per alias (``F.broadcast``) — all JVM-side.
 * **Skew**: the head alias (>30% of mentions) is harmless under a broadcast
   join (no shuffle by alias).  A dictionary past the broadcast limit
-  (``Dictionary.small`` false) takes ``salted_join`` (operators.py): the
-  repartition-join path with key salting.
+  (``Dictionary.small`` false) takes ``salted_join`` (operators.py).
 """
 
 from __future__ import annotations
@@ -38,9 +33,8 @@ from .operators import salted_join
 # worker-local matcher cache: Python workers are reused across tasks
 # (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
 # once per worker process instead of once per task.  Keyed by the
-# dictionary DIGEST shipped with the task (stage3._row_digest — the key
-# must not pin the full surface tuple of evicted entries, and the worker
-# must not rehash the surfaces per task) and bounded by estimated
+# dictionary DIGEST shipped with the task (the key must not pin the full
+# surface tuple of evicted entries) and bounded by estimated
 # FOOTPRINT, not entry count — a 100k-surface trie is tens of MB, and N
 # tries x many workers per node is real memory at cluster scale.
 _PATTERN_CACHE: OrderedDict = OrderedDict()  # digest -> (pattern, est_bytes)
@@ -91,8 +85,8 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     """extractions(doc_id, retained_spans) -> mentions(MENTION_SCHEMA).
 
     Arrow-native map (``mapInArrow``): spans are read from the Arrow
-    buffers; the alias automaton for ``dictionary`` (a stage3.Dictionary)
-    is compiled once per worker from the Spark broadcast of its surfaces."""
+    buffers; the alias automaton is compiled once per worker from the
+    Spark broadcast."""
     spark = extractions.sparkSession
     bc = spark.sparkContext.broadcast(dictionary.surfaces)
     key = dictionary.digest
@@ -149,8 +143,7 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
 def link_mentions(mentions: DataFrame, dictionary,
                   salt_buckets: int = 16) -> DataFrame:
     """Join mentions to the dictionary's best link per alias (max prior,
-    ties -> min entity_id: linking.build_link_map), broadcast when the
-    dictionary is small, salted otherwise.
+    ties -> min entity_id: linking.build_link_map).
 
     Returns (doc_id, surface, span_offset, start, entity_id, prior).
     """

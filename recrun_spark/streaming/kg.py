@@ -12,13 +12,10 @@ SAME stage-1..4 operators as the batch pipeline inside ``foreachBatch``:
 * each batch writes to ``triples/batch=<id>/`` with mode=overwrite —
   idempotent per batchId, so a retried/re-executed batch cannot duplicate
   (the foreachBatch exactly-once recipe);
-* the alias dictionary is compiled once per call, outside the batch
-  handler (``stage3.canonicalize`` -> ``Dictionary``: surfaces, best link
-  per alias, canonical map) and shared by every micro-batch of the call;
-* the dictionary digest is pinned beside ``_checkpoint`` on the first
-  call: earlier ``batch=<id>/`` outputs carry that dictionary's canonical
-  ids, so a later call with a different dictionary raises instead of
-  mixing two id spaces in one triples root;
+* the alias dictionary is compiled once per call (``stage3.canonicalize``)
+  and shared by its micro-batches; its digest is kept in
+  ``<out_dir>/_MANIFEST.json``, and a later call with another dictionary
+  raises rather than mix two canonical-id spaces in one triples root;
 * re-running after new files land processes ONLY the new files (file-source
   checkpoint), the streaming counterpart of manifest-based resume.
 
@@ -42,27 +39,13 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io.tableio import MANIFEST, read_manifest, write_json
 from ..readability import Settings
 from ..operators import release_caches
 from ..stage1 import DOCUMENTS_SCHEMA, extract_documents
 from ..stage2 import detect_mentions, link_mentions, load_aliases
 from ..stage3 import canonicalize
 from ..stage4 import assemble_triples
-
-
-def _pin_dictionary(out_dir: str, digest: bytes) -> None:
-    path = os.path.join(out_dir, "_DICTIONARY")
-    if os.path.exists(path):
-        with open(path) as f:
-            pinned = f.read().strip()
-        if pinned != digest.hex():
-            raise ValueError(
-                f"{out_dir} holds triples built with dictionary {pinned}, "
-                f"not {digest.hex()}: use a fresh output directory")
-        return
-    os.makedirs(out_dir, exist_ok=True)
-    with open(path, "w") as f:
-        f.write(digest.hex())
 
 
 def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
@@ -73,7 +56,13 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
     triples root (one ``batch=<id>/`` parquet dir per processed batch)."""
     aliases = aliases_df if aliases_df is not None else load_aliases(spark)
     dictionary = canonicalize(aliases)
-    _pin_dictionary(out_dir, dictionary.digest)
+    pinned = (read_manifest(out_dir) or {}).get("dictionary")
+    if pinned is None:
+        write_json(os.path.join(out_dir, MANIFEST),
+                   {"complete": True, "dictionary": dictionary.digest.hex()})
+    elif pinned != dictionary.digest.hex():
+        raise ValueError(f"{out_dir} holds triples built with dictionary "
+                         f"{pinned}: use a fresh output directory")
     triples_root = os.path.join(out_dir, "triples")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:

@@ -489,10 +489,13 @@ def test_stage2_surface_digest_injective():
     injective over dictionaries — a NUL inside a surface used to collide
     ('a\\x00b',) with ('a', 'b') and silently return the wrong matcher.
     The row digest covers every component: alias, entity_id and prior."""
+    import pyarrow as pa
+
     from recrun_spark.stage3 import _row_digest
 
     def d(*rows):
-        return _row_digest(rows)
+        return _row_digest(pa.table(list(zip(*rows)),
+                                    names=["alias", "entity_id", "prior"]))
 
     # alias
     assert d(("a\x00b", "Q1", 0.9)) != d(("a", "b\x00Q1", 0.9))
@@ -505,6 +508,11 @@ def test_stage2_surface_digest_injective():
     # row boundaries
     assert d(("a", "Q1", 0.5), ("b", "Q2", 0.5)) != d(("a", "Q1", 0.5))
     assert d(("x", "Q1", 0.9)) == d(("x", "Q1", 0.9))
+    # a function of the rows, not of the Arrow chunk layout
+    t = pa.table([["a", "b", "c"], ["Q1", "Q2", "Q3"], [0.5, 0.6, 0.7]],
+                 names=["alias", "entity_id", "prior"])
+    assert _row_digest(pa.concat_tables([t.slice(0, 1), t.slice(1)])) \
+        == _row_digest(t)
 
 
 def test_minhash_lsh_materialize_flag(spark):

@@ -76,19 +76,23 @@ def _random_dictionary(seed=3):
     return rows
 
 
-def test_canonicalize_matches_golden(spark):
-    """Both Dictionary paths — built on the driver (the default at this
-    size) and in Spark (``broadcast_max_rows=0``) — equal the single-node
-    linking rules on the fixture dictionary and on a random one."""
+def test_canonicalize_matches_golden(spark, monkeypatch):
+    """All three Dictionary paths — built on the driver (the default at
+    this size), in Spark with the broadcast link (``DRIVER_MAX_ROWS=0``)
+    and in Spark with the salted one (``broadcast_max_rows=0``) — equal the
+    single-node linking rules on the fixture dictionary and a random one."""
+    from recrun_spark import stage3
     from recrun_spark.fixtures.aliases import make_aliases
     from recrun_spark.linking import build_link_map, canonical_map
     from recrun_spark.stage2 import load_aliases
-    from recrun_spark.stage3 import canonicalize
+    driver_max = stage3.DRIVER_MAX_ROWS
     for rows in (make_aliases(42), _random_dictionary()):
         aliases = load_aliases(spark, rows)
         digests = set()
-        for limit in (1_000_000, 0):
-            d = canonicalize(aliases, broadcast_max_rows=limit)
+        for cap, limit in ((driver_max, 1_000_000), (0, 1_000_000),
+                           (driver_max, 0)):
+            monkeypatch.setattr(stage3, "DRIVER_MAX_ROWS", cap)
+            d = stage3.canonicalize(aliases, broadcast_max_rows=limit)
             assert d.small == (limit > 0)
             assert d.surfaces == tuple(sorted({r[0] for r in rows}))
             assert {r["entity_id"]: r["canonical_id"]
@@ -275,3 +279,28 @@ def test_resume_after_kill_between_data_and_manifest(spark, two_inputs,
     assert read_manifest(os.path.join(out, "stage2_mentions")) is None
     pipeline.run_pipeline(spark, b, out)
     assert _written_triples(spark, out) == expect_b
+
+
+def test_code_digest_reads_a_zipped_package(tmp_path):
+    """``spark-submit --py-files`` ships the engine as a zip: the resume
+    fingerprint must hash the zip's members, the same as the source tree."""
+    import subprocess
+    import sys
+    import zipfile
+
+    from recrun_spark import pipeline
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pipeline.__file__)))
+    zpath = str(tmp_path / "recrun_spark.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        for d, _dirs, files in os.walk(os.path.join(root, "recrun_spark")):
+            for fn in files:
+                if fn.endswith(".py"):
+                    p = os.path.join(d, fn)
+                    z.write(p, os.path.relpath(p, root))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "from recrun_spark import pipeline as p; "
+            "assert p.__file__.startswith(sys.argv[1]), p.__file__; "
+            "print(p._code_digest())")
+    out = subprocess.run([sys.executable, "-c", code, zpath], cwd=tmp_path,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == pipeline._code_digest()

@@ -10,7 +10,10 @@
 set -euo pipefail
 
 REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+# unset env: size to this machine by the same rule as session.get_spark
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+HEAP="${SPARK_GRAFT_DRIVER_MEM:-$(cd "$REPO" && python3 -c \
+  'from recrun_spark.session import _machine_heap; print(_machine_heap())')}"
 ZIP="$(mktemp -d)/recrun_spark.zip"
 
 (cd "$REPO" && python3 - "$ZIP" <<'PY'
@@ -30,7 +33,7 @@ PY
 
 exec /opt/spark/bin/spark-submit \
   --master "local[${CPUS}]" \
-  --driver-memory "${SPARK_GRAFT_DRIVER_MEM:-48g}" \
+  --driver-memory "$HEAP" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
