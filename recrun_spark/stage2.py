@@ -159,7 +159,15 @@ def link_mentions(mentions: DataFrame, dictionary,
 
 
 def load_aliases(spark: SparkSession, rows=None, seed: int = 42) -> DataFrame:
+    """aliases(ALIAS_SCHEMA) as a local relation built from Arrow (no Spark
+    job to read it, unlike a frame built from a list)."""
+    import pyarrow as pa
+
     from .fixtures.aliases import make_aliases
     rows = rows if rows is not None else make_aliases(seed)
-    return spark.createDataFrame(
-        [(a, e, float(p)) for a, e, p in rows], schema=ALIAS_SCHEMA)
+    cols = list(zip(*rows)) or [(), (), ()]
+    table = pa.table([pa.array(cols[0], pa.string()),
+                      pa.array(cols[1], pa.string()),
+                      pa.array([float(p) for p in cols[2]], pa.float64())],
+                     names=ALIAS_SCHEMA.names)
+    return spark.createDataFrame(table, ALIAS_SCHEMA)

@@ -82,17 +82,21 @@ def same_as_edges_df(aliases: DataFrame,
             .distinct())
 
 
+def _best_links(t: pa.Table) -> pa.Table:
+    """The best row per alias — max prior, ties -> min entity_id
+    (``linking.build_link_map``'s rule, the Spark path's window argmax)."""
+    t = t.sort_by([("alias", "ascending"), ("prior", "descending"),
+                   ("entity_id", "ascending")])
+    codes = pc.fill_null(
+        t.column("alias").combine_chunks().dictionary_encode().indices, -1)
+    return t.take(np.flatnonzero(np.diff(codes.to_numpy(), prepend=-2)))
+
+
 def canonicalize(aliases: DataFrame,
                  broadcast_max_rows: int = 1_000_000) -> Dictionary:
     """aliases(alias, entity_id, prior) -> Dictionary."""
+    spark = aliases.sparkSession
     rows = aliases.select("alias", "entity_id", "prior")
-    # argmax per alias is doc-independent: reduce the dictionary once
-    # (|aliases| rows), not per mention (|mentions| rows)
-    w = (Window.partitionBy("alias")
-         .orderBy(F.col("prior").desc(), F.col("entity_id").asc()))
-    links = (rows.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") == 1).drop("_rn"))
-
     # ONE Arrow transfer of the rows, sorted on the driver: the surfaces
     # must reach the driver for the automaton anyway.  On 4 cores (150k to
     # 1.2M rows) this costs no more than a distinct-surface collect, while
@@ -100,10 +104,22 @@ def canonicalize(aliases: DataFrame,
     t = rows.toArrow().sort_by([(c, "ascending") for c in rows.columns])
     surfaces = tuple(pc.unique(t.column("alias")).to_pylist())
     if t.num_rows <= min(DRIVER_MAX_ROWS, broadcast_max_rows):
+        # both frames are local relations built from Arrow: no Spark job
+        # to scan, broadcast or write them (a list-built frame is an RDD)
+        links = spark.createDataFrame(_best_links(t), rows.schema)
         probe = list(zip(*(t.column(c).to_pylist() for c in rows.columns)))
-        canonical = aliases.sparkSession.createDataFrame(
-            sorted(canonical_map(probe).items()), CANONICAL_SCHEMA)
+        ids = sorted(canonical_map(probe).items())
+        canonical = spark.createDataFrame(pa.table(
+            [pa.array([e for e, _ in ids], pa.string()),
+             pa.array([c for _, c in ids], pa.string())],
+            names=CANONICAL_SCHEMA.names), CANONICAL_SCHEMA)
     else:
+        # argmax per alias is doc-independent: reduce the dictionary once
+        # (|aliases| rows), not per mention (|mentions| rows)
+        w = (Window.partitionBy("alias")
+             .orderBy(F.col("prior").desc(), F.col("entity_id").asc()))
+        links = (rows.withColumn("_rn", F.row_number().over(w))
+                 .where(F.col("_rn") == 1).drop("_rn"))
         comp = connected_components(same_as_edges_df(aliases), "src", "dst")
         canonical = (aliases.select("entity_id").distinct()
                      .join(comp.withColumnRenamed("node", "entity_id"),

@@ -88,7 +88,7 @@ def test_canonicalize_matches_golden(spark, monkeypatch):
     driver_max = stage3.DRIVER_MAX_ROWS
     for rows in (make_aliases(42), _random_dictionary()):
         aliases = load_aliases(spark, rows)
-        digests = set()
+        digests, link_rows = set(), set()
         for cap, limit in ((driver_max, 1_000_000), (0, 1_000_000),
                            (driver_max, 0)):
             monkeypatch.setattr(stage3, "DRIVER_MAX_ROWS", cap)
@@ -101,8 +101,60 @@ def test_canonicalize_matches_golden(spark, monkeypatch):
             assert len(links) == len(d.surfaces)
             assert {r["alias"]: r["entity_id"]
                     for r in links} == build_link_map(rows)
+            assert d.links.columns == ["alias", "entity_id", "prior"]
+            link_rows.add(tuple(sorted(map(tuple, links))))
             digests.add(d.digest)
-        assert len(digests) == 1
+        # full best rows, prior included, are the same on every path
+        assert len(digests) == 1 and len(link_rows) == 1
+
+
+def test_load_aliases_rows_and_schema(spark):
+    """The Arrow-built alias frame holds the fixture rows in order, with
+    priors as doubles, under ALIAS_SCHEMA."""
+    from recrun_spark.fixtures.aliases import make_aliases
+    from recrun_spark.stage2 import ALIAS_SCHEMA, load_aliases
+    df = load_aliases(spark)
+    assert df.schema == ALIAS_SCHEMA
+    assert [tuple(r) for r in df.collect()] == [
+        (a, e, float(p)) for a, e, p in make_aliases(42)]
+    assert load_aliases(spark, []).collect() == []
+
+
+def test_job_counts_on_the_kg_path(spark, tmp_path):
+    """Metadata the engine already holds costs no Spark job: a table write
+    is the write alone (lineage from its footers), a read is schema-pinned
+    (no inference), and compiling the fixture dictionary is its one Arrow
+    transfer.  The alias, link and canonical frames are local relations,
+    so reading them back is free too (a list-built frame would be an RDD
+    scan)."""
+    import pyarrow as pa
+
+    from recrun_spark.io.tableio import read_table, write_table
+    from recrun_spark.stage2 import load_aliases
+    from recrun_spark.stage3 import canonicalize
+    sc = spark.sparkContext
+
+    def jobs(name, fn):
+        group = f"job-count-guard:{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    local = spark.createDataFrame(pa.table({"doc_id": ["d1", "d2", "d0"],
+                                            "n": [1, 2, 3]}))
+    path = str(tmp_path / "t")
+    assert jobs("write_table", lambda: write_table(local, path)) == 1
+    assert jobs("read_table", lambda: read_table(spark, path)) == 0
+    built = []
+    assert jobs("canonicalize", lambda: built.append(
+        canonicalize(load_aliases(spark)))) == 1
+    d = built[0]
+    assert jobs("dictionary frames", lambda: (
+        load_aliases(spark).collect(), d.links.collect(),
+        d.canonical.collect())) == 0
 
 
 def test_salted_join_equivalence(spark):
@@ -163,7 +215,7 @@ def test_resume_skips_completed_stages(spark, corpus_parquet, pipeline_out):
     assert third["triples"] == first["triples"]
 
 
-def test_triples_partitioned_by_pred(pipeline_out):
+def test_triples_partitioned_by_pred(spark, pipeline_out):
     out, _ = pipeline_out
     parts = [d for d in os.listdir(os.path.join(out, "stage4_triples"))
              if d.startswith("pred=")]
@@ -175,6 +227,19 @@ def test_triples_partitioned_by_pred(pipeline_out):
     assert {p["pred"] for p in manifest["partitions"]} == {
         "co_mentioned_with", "illustrated_by", "mentioned_in",
         "next_page_of"}
+    # the footer-built lineage is what a scan of the table computes, and
+    # the pinned schema is the inferred one (pred is a non-null literal)
+    from recrun_spark.io.tableio import read_table
+    path = os.path.join(out, "stage4_triples")
+    assert read_table(spark, path).schema == spark.read.parquet(path).schema
+    scanned = {r["pred"]: (r["rows"], r["min_key"], r["max_key"]) for r in
+               spark.read.parquet(path)
+               .groupBy("pred")
+               .agg(F.count(F.lit(1)).alias("rows"),
+                    F.min("doc_id").alias("min_key"),
+                    F.max("doc_id").alias("max_key")).collect()}
+    assert {p["pred"]: (p["rows"], p["min_key"], p["max_key"])
+            for p in manifest["partitions"]} == scanned
 
 
 # --- resume fingerprints: a resume never returns another input's,

@@ -143,3 +143,83 @@ def test_bucketed_tables_join_without_shuffle(spark):
     # scan -> (sort) -> SortMergeJoin, shuffle paid at write time
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan
+
+
+def _scanned_lineage(spark, path, partition_by, key):
+    """Per-partition rows and key range by a Spark aggregate over the
+    table read back with an inferred schema — what the footers replace."""
+    rows = (spark.read.parquet(path).groupBy(*partition_by)
+            .agg(F.count(F.lit(1)).alias("rows"),
+                 F.min(key).alias("min_key"), F.max(key).alias("max_key"))
+            .collect())
+    return sorted((r.asDict() for r in rows), key=repr)
+
+
+def _assert_lineage_is_the_scans(spark, manifest, path, partition_by, key):
+    scanned = _scanned_lineage(spark, path, partition_by, key)
+    assert sorted(manifest["partitions"], key=repr) == scanned
+    assert manifest["rows"] == sum(p["rows"] for p in scanned)
+
+
+def test_footer_lineage_equals_scan(spark, tmpdir_path):
+    """Lineage read from the written footers equals the Spark scan's, and
+    ``read_table`` returns the inferred schema (names, types, nullability,
+    order) without inferring it: an unpartitioned table with non-nullable
+    and nested columns, one partitioned by values Spark must escape plus a
+    null, and an empty one."""
+    nested = spark.range(40).select(
+        F.format_string("doc%03d", (F.col("id") * 7) % 40).alias("doc_id"),
+        F.col("id"),  # non-nullable
+        F.array(F.struct(F.col("id").alias("n"),
+                         F.lit("x").alias("s"))).alias("spans"))
+    values = ["a/b", "x=y", "50%", "a b", None]
+    escaped = spark.range(50).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.element_at(F.array(*[F.lit(v) for v in values]),
+                     (F.col("id") % len(values) + 1).cast("int")).alias("k"))
+    cases = [("flat", nested, [], "doc_id"),
+             ("escaped", escaped, ["k"], "doc_id"),
+             ("empty", nested.limit(0), [], "doc_id")]
+    for name, df, partition_by, key in cases:
+        path = os.path.join(tmpdir_path, name)
+        m = tableio.write_table(df, path, partition_by=partition_by,
+                                stage=name, lineage_key=key)
+        _assert_lineage_is_the_scans(spark, m, path, partition_by, key)
+        inferred = spark.read.parquet(path).schema
+        assert tableio.read_table(spark, path).schema == inferred, name
+        assert [f.name for f in inferred] == [
+            c for c in df.columns if c not in partition_by] + partition_by
+    dirs = sorted(d for d in os.listdir(os.path.join(tmpdir_path, "escaped"))
+                  if d.startswith("k="))
+    assert dirs == ["k=50%25", "k=__HIVE_DEFAULT_PARTITION__", "k=a b",
+                    "k=a%2Fb", "k=x%3Dy"]
+    m = tableio.read_manifest(os.path.join(tmpdir_path, "escaped"))
+    assert {p["k"] for p in m["partitions"]} == set(values)
+    assert m["fingerprint"] is None
+
+
+def test_footer_lineage_falls_back_to_the_scan(spark, tmpdir_path):
+    """Footers without statistics for the key (parquet-mr told not to
+    write them) still give the scan's lineage, not 0 rows or null bounds."""
+    import glob
+
+    import pyarrow.parquet as pq
+    df = spark.range(30).select(
+        F.format_string("d%02d", F.col("id")).alias("doc_id"),
+        # not digits: the inferring reader would type "0" as an int
+        F.format_string("p%d", F.col("id") % 3).alias("k"))
+    path = os.path.join(tmpdir_path, "nostats")
+    spark.conf.set("parquet.column.statistics.enabled", "false")
+    try:
+        m = tableio.write_table(df, path, partition_by=["k"],
+                                fingerprint={"input": "x"})
+    finally:
+        spark.conf.unset("parquet.column.statistics.enabled")
+    files = glob.glob(os.path.join(path, "k=*", "*.parquet"))
+    assert files and all(
+        pq.read_metadata(f).row_group(0).column(0).statistics is None
+        for f in files)
+    _assert_lineage_is_the_scans(spark, m, path, ["k"], "doc_id")
+    assert m["rows"] == 30
+    assert all(p["min_key"] and p["max_key"] for p in m["partitions"])
+    assert tableio.read_manifest(path)["fingerprint"] == {"input": "x"}
