@@ -114,10 +114,6 @@ def write_table(df: DataFrame, path: str, partition_by=None,
     return manifest
 
 
-def _lineage_order(p: dict, partition_by: list):
-    return tuple((p[c] is not None, p[c]) for c in partition_by)
-
-
 def _scan_lineage(stored: DataFrame, partition_by: list, key: str) -> list:
     """Rows and key range per partition value by a Spark aggregate over the
     written table (a global aggregate when unpartitioned: one row, also
@@ -127,10 +123,8 @@ def _scan_lineage(stored: DataFrame, partition_by: list, key: str) -> list:
                  F.min(key).alias("min_key"),
                  F.max(key).alias("max_key"))
             .collect())
-    lineage = [{**{c: r[c] for c in partition_by}, "rows": r["rows"],
-                "min_key": r["min_key"], "max_key": r["max_key"]}
-               for r in rows]
-    return sorted(lineage, key=lambda p: _lineage_order(p, partition_by))
+    return [{**{c: r[c] for c in partition_by}, "rows": r["rows"],
+             "min_key": r["min_key"], "max_key": r["max_key"]} for r in rows]
 
 
 def _unescape(s: str) -> str:
@@ -140,8 +134,7 @@ def _unescape(s: str) -> str:
 
 def _hidden(name: str) -> bool:
     """Names Spark's file index skips (``_SUCCESS``, ``.crc`` files)."""
-    return ((name.startswith("_") and "=" not in name)
-            or name.startswith(".") or name.endswith("._COPYING_"))
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
 
 
 def _footer_lineage(spark, path: str, schema: StructType,
@@ -190,11 +183,9 @@ def _footer_lineage(spark, path: str, schema: StructType,
             g[0] += rg.num_rows
             g[1] = st.min if g[1] is None else min(g[1], st.min)
             g[2] = st.max if g[2] is None else max(g[2], st.max)
-    lineage = [{**dict(zip(partition_by, values)), "rows": n,
-                "min_key": lo, "max_key": hi}
-               for values, (n, lo, hi) in groups.items()
-               if n or not partition_by]
-    return sorted(lineage, key=lambda p: _lineage_order(p, partition_by))
+    return [{**dict(zip(partition_by, values)), "rows": n,
+             "min_key": lo, "max_key": hi}
+            for values, (n, lo, hi) in groups.items() if n or not partition_by]
 
 
 def write_json(path: str, obj) -> None:
