@@ -572,14 +572,9 @@ def skyline2d(df: DataFrame, x_col: str, y_col: str,
 
 def release_caches(df: DataFrame) -> None:
     """Unpersist the cached intermediates an operator attached to its
-    result (the ``_recrun_caches`` list, plus legacy ``_recrun_*``
-    single-handle attributes) — call after materializing the result in a
-    long-lived session."""
+    result (the ``_recrun_caches`` list) — call after materializing the
+    result in a long-lived session."""
     for cached in getattr(df, "_recrun_caches", []) or []:
-        if cached is not None:
-            cached.unpersist()
-    for attr in ("_recrun_ents", "_recrun_shingles", "_recrun_probes"):
-        cached = getattr(df, attr, None)
         if cached is not None:
             cached.unpersist()
 

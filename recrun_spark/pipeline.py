@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .io.tableio import (MANIFEST, read_manifest, read_table, write_json,
                          write_table)
-from .operators import release_caches
 from .readability import Settings
 from .stage1 import extract_documents
 from .stage2 import detect_mentions, link_mentions, load_aliases
@@ -108,9 +107,7 @@ def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
             # manifest would otherwise leave the old one vouching for it
             if os.path.exists(os.path.join(path, MANIFEST)):
                 os.remove(os.path.join(path, MANIFEST))
-            df = build()
-            write_table(df, path, stage=name, fingerprint=fp, **write_kw)
-            release_caches(df)
+            write_table(build(), path, stage=name, fingerprint=fp, **write_kw)
         return read_table(spark, path)
 
     extractions = stage(

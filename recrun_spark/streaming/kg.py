@@ -71,6 +71,7 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
         trips = assemble_triples(ex, linked, dictionary.canonical)
         (trips.write.mode("overwrite")
          .parquet(os.path.join(triples_root, f"batch={batch_id}")))
+        # a no-op on these frames; the kgbench tracer ends the batch span here
         release_caches(trips)
 
     stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)

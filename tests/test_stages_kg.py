@@ -120,6 +120,90 @@ def test_load_aliases_rows_and_schema(spark):
     assert load_aliases(spark, []).collect() == []
 
 
+# surface -> entity_id, and entity_id -> canonical_id (E5 folds onto E2)
+_LINKS = {"alpha": "E1", "beta": "E2", "gamma": "E3", "delta": "E4",
+          "eps": "E5"}
+_CANON = {"E1": "E1", "E2": "E2", "E3": "E3", "E4": "E4", "E5": "E2"}
+SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
+
+
+def _stage4_inputs(spark):
+    """(extraction rows, extractions, linked mentions, canonical) built
+    from Arrow; the linked rows are the text spans' mentions."""
+    import pyarrow as pa
+
+    from recrun_spark.linking import build_alias_pattern, find_mentions
+
+    def spans(text, *imgs):
+        return ([("text", text, "", 0)] if text else []) + [
+            ("img", "", ref, k + 1) for k, ref in enumerate(imgs)]
+
+    rows = [
+        ("d1", "", spans("alpha")),                        # one entity
+        ("d2", "", spans("alpha beta gamma eps", "i1.png", "i2.png",
+                         "i1.png", "")),                   # E5 -> E2
+        ("d3", "p3", spans("")),                           # no entity
+        ("d4", "p4a", spans("delta", "i4a.png")),          # two rows of d4
+        ("d4", "p4b", spans("beta", "i4b.png")),
+        (None, "pn", spans("gamma", "in.png")),            # null doc_id
+    ]
+    span_type = pa.struct([(n, pa.int32() if n == "offset" else pa.string())
+                           for n in SPAN_FIELDS])
+    extractions = spark.createDataFrame(pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.string()),
+        "next_page": pa.array([r[1] for r in rows], pa.string()),
+        "retained_spans": pa.array(
+            [[dict(zip(SPAN_FIELDS, s)) for s in r[2]] for r in rows],
+            pa.list_(span_type))}))
+    pattern = build_alias_pattern(_LINKS)
+    mentions = [(doc, surface, _LINKS[surface])
+                for doc, _np, ss in rows for kind, text, _m, _o in ss
+                if kind == "text"
+                for surface, _start in find_mentions(text, pattern)]
+    linked = spark.createDataFrame(pa.table({
+        "doc_id": pa.array([m[0] for m in mentions], pa.string()),
+        "surface": pa.array([m[1] for m in mentions], pa.string()),
+        "entity_id": pa.array([m[2] for m in mentions], pa.string())}))
+    canonical = spark.createDataFrame(pa.table({
+        "entity_id": pa.array(list(_CANON), pa.string()),
+        "canonical_id": pa.array(list(_CANON.values()), pa.string())}))
+    return rows, extractions, linked, canonical
+
+
+def test_assemble_triples_per_doc_rules(spark):
+    """Stage 4 emits exactly the ``triples_for_doc`` rules of each doc_id's
+    rows taken together (two rows of one doc_id are one document), with no
+    duplicate row.  A null doc_id is one more document, so it gets all four
+    rules — ``illustrated_by`` included, which an inner join on doc_id
+    would drop."""
+    from recrun_spark.linking import build_alias_pattern, triples_for_doc
+    from recrun_spark.stage4 import TRIPLE_COLS, assemble_triples
+    rows, extractions, linked, canonical = _stage4_inputs(spark)
+    out = assemble_triples(extractions, linked, canonical)
+    assert tuple(out.columns) == TRIPLE_COLS
+    got = [tuple(r) for r in out.collect()]
+    assert len(got) == len(set(got))
+
+    pattern = build_alias_pattern(_LINKS)
+    expected = set()
+    for doc in {r[0] for r in rows}:
+        group = [r for r in rows if r[0] == doc]
+        spans = [s for r in group for s in r[2]]
+        for _doc, next_page, _spans in group:
+            expected |= triples_for_doc(doc, spans, next_page, pattern,
+                                        _LINKS, _CANON)
+    assert set(got) == expected
+    # the cases the rows stand for
+    assert not any(p == "co_mentioned_with" and d == "d1"
+                   for _s, p, _o, d in got)
+    assert "E5" not in {s for s, *_ in got}
+    assert {o for s, p, o, d in got if p == "illustrated_by"
+            and d == "d2" and s == "E1"} == {"i1.png", "i2.png"}
+    assert {s for s, p, _o, d in got if d == "d4"
+            and p == "next_page_of"} == {"p4a", "p4b"}
+    assert ("E3", "illustrated_by", "in.png", None) in got
+
+
 def test_job_counts_on_the_kg_path(spark, tmp_path):
     """Metadata the engine already holds costs no Spark job: a table write
     is the write alone (lineage from its footers), a read is schema-pinned
@@ -155,6 +239,17 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
     assert jobs("dictionary frames", lambda: (
         load_aliases(spark).collect(), d.links.collect(),
         d.canonical.collect())) == 0
+
+    # stage 4 is one doc_id aggregate: one hash exchange, the canonical
+    # broadcast, and no cached intermediate
+    from recrun_spark.stage4 import assemble_triples
+    trips = assemble_triples(*_stage4_inputs(spark)[1:])
+    plan = trips._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert jobs("write triples", lambda: write_table(
+        trips, str(tmp_path / "triples"), partition_by=["pred"])) == 3
 
 
 def test_salted_join_equivalence(spark):

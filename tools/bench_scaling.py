@@ -62,8 +62,6 @@ def run_pipeline():
     trips = assemble_triples(ex, linked, dictionary.canonical)
     n = trips.count()
     ex.unpersist(); linked.unpersist()
-    from recrun_spark.operators import release_caches
-    release_caches(trips)
     return n
 
 
