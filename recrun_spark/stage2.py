@@ -122,11 +122,10 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     # is semantics-identical and cuts the Arrow transport (img/link/
     # header spans never cross the boundary); span_offset rides in the
     # struct, unaffected by the filter
-    src = extractions.select(
+    src = extractions.selectExpr(
         "doc_id",
-        F.filter("retained_spans",
-                 lambda s: (s["kind"] == "text") & (s["text"] != ""))
-        .alias("retained_spans"))
+        "filter(retained_spans, s -> s.kind = 'text' AND s.text != '')"
+        " AS retained_spans")
     # parallelism floor for the Python fold: a narrow upstream (a limit()
     # collapses to one partition, a single unsplittable input file, a
     # 1-partition cache) would run the per-doc automaton nearly serially

@@ -30,43 +30,41 @@ from pyspark.sql import functions as F
 TRIPLE_COLS = ("subj", "pred", "obj", "doc_id")
 
 
-def _triple(subj, pred: str, obj):
-    return F.struct(subj.alias("subj"), F.lit(pred).alias("pred"),
-                    obj.alias("obj"))
+def _triple(subj: str, pred: str, obj: str) -> str:
+    return f"named_struct('subj', {subj}, 'pred', '{pred}', 'obj', {obj})"
+
+
+# the rules over one document's row (es: its sorted canonical entity set,
+# imgs: its img refs, nps: its next pages).  Co-mentions pair each entity
+# with the ones after it in the sorted set, so a one-entity set yields an
+# empty slice and no pair.
+_RULES = f"""concat(
+    transform(es, e -> {_triple('e', 'mentioned_in', 'doc_id')}),
+    flatten(transform(es, (e, i) -> transform(slice(es, i + 2, size(es)),
+        y -> {_triple('e', 'co_mentioned_with', 'y')}))),
+    flatten(transform(es, e -> transform(imgs,
+        m -> {_triple('e', 'illustrated_by', 'm')}))),
+    transform(nps, n -> {_triple('n', 'next_page_of', 'doc_id')}))"""
 
 
 def assemble_triples(extractions: DataFrame, linked_mentions: DataFrame,
                      canonical: DataFrame) -> DataFrame:
+    # expressions are SQL text, one parse each on the JVM: from Python
+    # lambdas and Column calls every variable, column and literal is a
+    # Py4J round trip (~720 for this plan), paid by every micro-batch
     ents = (linked_mentions
             .join(F.broadcast(canonical), "entity_id")
-            .select("doc_id", F.col("canonical_id").alias("entity")))
+            .selectExpr("doc_id", "canonical_id AS entity"))
     # per extraction row: its non-empty img refs, and its next page or null
-    pages = extractions.select(
+    pages = extractions.selectExpr(
         "doc_id",
-        F.transform(F.filter("retained_spans",
-                             lambda s: (s["kind"] == "img")
-                             & (s["media_ref"] != "")),
-                    lambda s: s["media_ref"]).alias("imgs"),
-        F.when(F.col("next_page") != "", F.col("next_page"))
-        .alias("next_page"))
+        "transform(filter(retained_spans, s -> s.kind = 'img'"
+        " AND s.media_ref != ''), s -> s.media_ref) AS imgs",
+        "nullif(next_page, '') AS next_page")
 
     docs = (ents.unionByName(pages, allowMissingColumns=True)
             .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_set("entity")).alias("es"),
-                 F.array_distinct(F.flatten(F.collect_list("imgs")))
-                 .alias("imgs"),
-                 F.collect_set("next_page").alias("nps")))
-    doc = F.col("doc_id")
-    es = F.col("es")
-    rules = F.concat(
-        F.transform(es, lambda e: _triple(e, "mentioned_in", doc)),
-        # pairs i < j of the sorted set: each entity with the ones after it
-        # (a one-entity set yields an empty slice, so no pair)
-        F.flatten(F.transform(es, lambda e, i: F.transform(
-            F.slice(es, i + 2, F.size(es)),
-            lambda y: _triple(e, "co_mentioned_with", y)))),
-        F.flatten(F.transform(es, lambda e: F.transform(
-            "imgs", lambda m: _triple(e, "illustrated_by", m)))),
-        F.transform("nps", lambda n: _triple(n, "next_page_of", doc)))
-    return (docs.select(F.explode(rules).alias("t"), "doc_id")
-            .select("t.subj", "t.pred", "t.obj", "doc_id"))
+            .agg(F.expr("sort_array(collect_set(entity)) AS es"),
+                 F.expr("array_distinct(flatten(collect_list(imgs))) AS imgs"),
+                 F.expr("collect_set(next_page) AS nps")))
+    return docs.selectExpr(f"inline({_RULES})", "doc_id")
