@@ -5,6 +5,10 @@ Tuned for correctness tests on local[N] but configured the way a
 backstop), Arrow-vectorized Python UDF transport, nested-schema pruning so
 span-array projections reach the parquet scan, and shuffle partitions sized
 to the parallelism actually available rather than the 200 default.
+
+A local session also runs its Python workers under ``recrun_spark.pydaemon``
+(Spark's daemon plus a zip-import cache fix that saves ~0.15 s of CPU per
+Python task); a session on an external master keeps Spark's stock daemon.
 """
 
 from __future__ import annotations
@@ -92,6 +96,10 @@ def get_spark(app_name: str = "recrun_spark", cpus: int | None = None,
         b = b.config("spark.driver.memory",
                      os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                      or _machine_heap())
+        # workers fork from a daemon that stops re-reading pyspark.zip on
+        # every task (pydaemon.py); on a cluster a --py-files zip is not
+        # on the daemon's path when it starts, so Spark's own daemon runs
+        b = b.config("spark.python.daemon.module", "recrun_spark.pydaemon")
     b = (b
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
          .config("spark.sql.adaptive.enabled", "true")

@@ -10,6 +10,10 @@ Scale design:
   per worker from a Spark *broadcast* of the alias surfaces (not shipped
   per-batch, not a join against exploded token n-grams — at 10^12 docs an
   n-gram explode would shuffle orders of magnitude more rows than it keeps).
+  Its partitioning follows its input, with no repartition in front: the
+  batch reads one stage-1 file per stage-1 task, and the stream's
+  micro-batch is one file, folded in one task (a repartition there cost a
+  shuffle, a job and 4 Python tasks per micro-batch).
 * **Entity-link scoring is a broadcast hash join** against the
   dictionary's best link per alias (``F.broadcast``) — all JVM-side.
 * **Skew**: the head alias (>30% of mentions) is harmless under a broadcast
@@ -126,16 +130,6 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
         "doc_id",
         "filter(retained_spans, s -> s.kind = 'text' AND s.text != '')"
         " AS retained_spans")
-    # parallelism floor for the Python fold: a narrow upstream (a limit()
-    # collapses to one partition, a single unsplittable input file, a
-    # 1-partition cache) would run the per-doc automaton nearly serially
-    # on an idle cluster.  Only rebalance when the input has FEWER
-    # partitions than the default parallelism — at production scale scans
-    # carry many splits and this is a no-op, so the operator stays a pure
-    # map there (guide §2.5: fix input skew right after the read).
-    target = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
     return src.mapInArrow(fn, schema=MENTION_SCHEMA)
 
 

@@ -66,7 +66,8 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
     triples_root = os.path.join(out_dir, "triples")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ex = extract_documents(batch_df, settings)
+        # the stream writes triples only: skip the text and html renders
+        ex = extract_documents(batch_df, settings, include_renders=False)
         linked = link_mentions(detect_mentions(ex, dictionary), dictionary)
         trips = assemble_triples(ex, linked, dictionary.canonical)
         (trips.write.mode("overwrite")

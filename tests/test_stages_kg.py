@@ -251,6 +251,71 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
     assert jobs("write triples", lambda: write_table(
         trips, str(tmp_path / "triples"), partition_by=["pred"])) == 3
 
+    # mention detection is a pure map: a one-partition input (the stream's
+    # one-file micro-batch) is matched where it is, with no exchange
+    from recrun_spark.stage2 import detect_mentions
+    mentions = detect_mentions(_stage4_inputs(spark)[1].coalesce(1), d)
+    plan = mentions._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def _zip_module(path, source):
+    import zipfile
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("zmod.py", source)
+
+
+def test_pydaemon_rereads_a_changed_archive_in_every_importer(
+        tmp_path, monkeypatch):
+    """An importer re-reads its zip only when the archive changed since it
+    last read it, and every importer of a changed archive re-reads it."""
+    import importlib.util
+    import zipimport
+
+    from recrun_spark import pydaemon
+    reads = []
+    stock_read = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_zip_directory_cache", {})
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda path: reads.append(path) or stock_read(path))
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        pydaemon.invalidate_caches)
+    path = str(tmp_path / "lib.zip")
+    _zip_module(path, "VALUE = 1\n")
+    importers = [zipimport.zipimporter(path), zipimport.zipimporter(path)]
+
+    def value(importer):
+        spec = importer.find_spec("zmod")
+        module = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(module)
+        return module.VALUE
+
+    for imp in importers:
+        imp.invalidate_caches()
+    del reads[:]
+    for imp in importers:
+        imp.invalidate_caches()
+    assert reads == []
+
+    _zip_module(path, "VALUE = 'rewritten'\n")
+    for imp in importers:
+        imp.invalidate_caches()
+    assert reads == [path, path]
+    assert [value(imp) for imp in importers] == ["rewritten", "rewritten"]
+
+
+def test_local_session_python_workers_run_under_pydaemon(spark):
+    import pyarrow as pa
+
+    def fn(batches):
+        import zipimport
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({"f": [code.co_filename]})
+
+    rows = spark.range(1, numPartitions=1).mapInArrow(fn, "f string").collect()
+    assert [r.f.endswith("recrun_spark/pydaemon.py") for r in rows] == [True]
+
 
 def test_salted_join_equivalence(spark):
     from recrun_spark.operators import salted_join
