@@ -22,10 +22,11 @@ Scale design (SURVEY.md §3/§4):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,
                                StructType)
 
@@ -85,20 +86,8 @@ def _pc():
 
 
 def _extract_arrow_batches(batches, settings: Settings,
-                           include_renders: bool = True):
+                           include_renders: bool, out_schema):
     import pyarrow as pa
-    out_schema = pa.schema([
-        ("doc_id", pa.string()),
-        ("title", pa.string()),
-        ("next_page", pa.string()),
-        ("text_length", pa.int32()),
-        ("score", pa.int32()),
-        ("retained_spans", pa.list_(pa.struct([
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()), ("offset", pa.int32())]))),
-        ("text", pa.string()),
-        ("html", pa.string()),
-    ])
     for batch in batches:
         doc_ids, kinds, texts, refs, offs, bounds = _unpack_spans_batch(batch)
         titles, nexts, tlens, scores = [], [], [], []
@@ -180,9 +169,11 @@ def extract_documents(documents: DataFrame,
     straight from the Arrow buffers, skipping the pandas dict-per-struct
     conversion that would otherwise dominate the stage."""
     settings = settings or Settings.shipped()
+    out_schema = to_arrow_schema(EXTRACTION_SCHEMA)
 
     def fn(batches):
-        return _extract_arrow_batches(batches, settings, include_renders)
+        return _extract_arrow_batches(batches, settings, include_renders,
+                                      out_schema)
 
     return documents.select("doc_id", "spans").mapInArrow(
         fn, schema=EXTRACTION_SCHEMA)

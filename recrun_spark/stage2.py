@@ -23,52 +23,29 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
-from .linking import TrieMatcher, build_alias_pattern, find_mentions
+from .linking import build_alias_pattern, find_mentions
 from .operators import salted_join
 
-# worker-local matcher cache: Python workers are reused across tasks
+# worker-local matcher: Python workers are reused across tasks
 # (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
-# once per worker process instead of once per task.  Keyed by the
-# dictionary DIGEST shipped with the task (the key must not pin the full
-# surface tuple of evicted entries) and bounded by estimated
-# FOOTPRINT, not entry count — a 100k-surface trie is tens of MB, and N
-# tries x many workers per node is real memory at cluster scale.
-_PATTERN_CACHE: OrderedDict = OrderedDict()  # digest -> (pattern, est_bytes)
-_PATTERN_CACHE_MAX_BYTES = int(os.environ.get(
-    "RECRUN_MATCHER_CACHE_BYTES", str(256 << 20)))
-
-
-def _estimate_matcher_bytes(surfaces_tuple: tuple, pattern) -> int:
-    """Footprint estimate: a dict-of-dicts trie costs ~200 bytes per stored
-    character (node dict + entry + key str, CPython 3.11 measurements); a
-    compiled regex alternation stores the program compactly (~10 B/char)."""
-    chars = sum(len(s) for s in surfaces_tuple)
-    per_char = 200 if isinstance(pattern, TrieMatcher) else 10
-    return 4096 + chars * per_char
+# once per worker process instead of once per task.  One slot, keyed by
+# the dictionary DIGEST shipped with the task: every call uses one
+# dictionary, and a new digest replaces (frees) the old matcher.
+_MATCHER: tuple = (None, None)  # (digest, pattern)
 
 
 def _cached_pattern(key: bytes, surfaces_tuple: tuple):
-    hit = _PATTERN_CACHE.pop(key, None)
-    if hit is None:
-        pattern = build_alias_pattern(surfaces_tuple)
-        hit = (pattern, _estimate_matcher_bytes(surfaces_tuple, pattern))
-        # evict least-recently-used (front = oldest insertion = LRU, since
-        # hits re-insert at the back) until the newcomer fits the budget;
-        # an oversized single matcher still caches alone (budget of one)
-        total = sum(sz for _, sz in _PATTERN_CACHE.values())
-        while _PATTERN_CACHE and total + hit[1] > _PATTERN_CACHE_MAX_BYTES:
-            _, (_, sz) = _PATTERN_CACHE.popitem(last=False)
-            total -= sz
-    _PATTERN_CACHE[key] = hit
-    return hit[0]
+    global _MATCHER
+    if _MATCHER[0] != key:
+        _MATCHER = (None, None)  # drop the old matcher before building
+        _MATCHER = (key, build_alias_pattern(surfaces_tuple))
+    return _MATCHER[1]
 
 
 MENTION_SCHEMA = StructType([
@@ -94,14 +71,12 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     spark = extractions.sparkSession
     bc = spark.sparkContext.broadcast(dictionary.surfaces)
     key = dictionary.digest
+    out_schema = to_arrow_schema(MENTION_SCHEMA)
 
     def fn(batches):
         import pyarrow as pa
 
         from .stage1 import _unpack_spans_batch
-        out_schema = pa.schema([
-            ("doc_id", pa.string()), ("surface", pa.string()),
-            ("span_offset", pa.int32()), ("start", pa.int32())])
         pattern = _cached_pattern(key, bc.value)  # built once per worker
         for batch in batches:
             doc_ids, kinds, texts, _refs, offs, bounds = \

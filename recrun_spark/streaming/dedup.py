@@ -3,8 +3,8 @@
 The batch engine dedups a corpus it can see whole
 (``functions/dedup.exact_duplicates``); an INGESTION pipeline sees
 documents arrive over time and must admit only first-seen content —
-without reprocessing the history each run.  This is the foreachBatch
-incremental pattern (same shape as streaming/kg.py): per micro-batch,
+without reprocessing the history each run.  The file stream is drained
+through ``streaming/base.py`` into ``foreachBatch``; per micro-batch,
 
 1. fingerprint the batch (md5 of normalized text — the exact-dedup rule);
 2. reduce the batch to one row per fingerprint (min doc_id — deterministic
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5
+from .base import drain, file_stream
 
 
 def dedup_batch_reduce(batch_df: DataFrame, text_col: str = "text",
@@ -59,8 +60,7 @@ def dedup_batch_reduce(batch_df: DataFrame, text_col: str = "text",
 def run_dedup_available_now(spark: SparkSession, input_dir: str,
                             out_dir: str, schema,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            max_files_per_trigger: int = 1) -> str:
+                            id_col: str = "doc_id") -> str:
     """Drain all available document files through first-seen dedup into
     ``<out_dir>/unique`` (parquet, columns fp + doc_id); returns the sink
     path.  Exactly-once per file via the checkpoint; the anti-join makes
@@ -76,15 +76,8 @@ def run_dedup_available_now(spark: SparkSession, input_dir: str,
             b = b.join(seen, "fp", "left_anti")
         b.write.mode("append").parquet(sink)
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-         .parquet(input_dir)
-         .writeStream
-         .foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(file_stream(spark, schema, input_dir).writeStream
+          .foreachBatch(handle), out_dir)
     return sink
 
 

@@ -2,15 +2,16 @@
 sum; HLL: cell-wise max) turned into streaming operators.
 
 Each micro-batch's cells are written to ``cells/batch=<id>/`` with
-mode=overwrite — idempotent per batchId, the same exactly-once recipe as
-streaming/kg.py — and the reader merges cells across batches, which by
-the merge property equals the batch sketch of everything seen.  No state
-store at all: the sketch IS the state, persisted as data, bounded at
-depth x width (CMS) / 2^p (HLL) cells per batch regardless of key
-cardinality.  CMS answers streaming "how often did we see key X" (hot-key
-detection, frequency capping); HLL answers streaming "how many DISTINCT
-keys so far" (unique users/documents) — both at cardinalities where exact
-streaming state would blow the state store.
+mode=overwrite — idempotent per batchId (``_drain_per_batch`` over the
+drain of ``streaming/base.py``) — and the reader merges cells across
+batches, which by the merge property equals the batch sketch of
+everything seen.  No state store at all: the sketch IS the state,
+persisted as data, bounded at depth x width (CMS) / 2^p (HLL) cells per
+batch regardless of key cardinality.  CMS answers streaming "how often
+did we see key X" (hot-key detection, frequency capping); HLL answers
+streaming "how many DISTINCT keys so far" (unique users/documents) —
+both at cardinalities where exact streaming state would blow the state
+store.
 """
 
 from __future__ import annotations
@@ -20,33 +21,39 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.events import bursts_from_hour_counts, hour_counts
 from ..functions.sketch import (CMS_DEPTH, CMS_WIDTH, HLL_P,
-                                count_min_sketch, hll_registers)
+                                count_min_sketch, hdr_histogram,
+                                hll_registers)
+from .base import drain, file_stream
+
+
+def _drain_per_batch(spark: SparkSession, input_dir: str, out_dir: str,
+                     schema, name: str, sketch) -> str:
+    """Drain available input files, writing ``sketch(micro-batch)`` to
+    ``<out_dir>/<name>/batch=<id>/`` with mode=overwrite (idempotent per
+    batchId); returns that root.  Re-running after new files land
+    sketches ONLY the new files (file-source checkpoint)."""
+    root = os.path.join(out_dir, name)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        (sketch(batch_df).write.mode("overwrite")
+         .parquet(os.path.join(root, f"batch={batch_id}")))
+
+    drain(file_stream(spark, schema, input_dir).writeStream
+          .foreachBatch(handle), out_dir)
+    return root
 
 
 def run_cms_available_now(spark: SparkSession, input_dir: str, out_dir: str,
                           key_col: str, schema,
-                          depth: int = CMS_DEPTH, width: int = CMS_WIDTH,
-                          max_files_per_trigger: int = 1) -> str:
-    """Drain available input files, sketching each micro-batch into
-    ``cells/batch=<id>/``; returns the cells root.  Re-running after new
-    files land sketches ONLY the new files (file-source checkpoint)."""
-    root = os.path.join(out_dir, "cells")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (count_min_sketch(batch_df, key_col, depth, width)
-         .write.mode("overwrite")
-         .parquet(os.path.join(root, f"batch={batch_id}")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return root
+                          depth: int = CMS_DEPTH, width: int = CMS_WIDTH
+                          ) -> str:
+    """CMS cells of each micro-batch under ``cells/batch=<id>/``; returns
+    the cells root."""
+    return _drain_per_batch(
+        spark, input_dir, out_dir, schema, "cells",
+        lambda b: count_min_sketch(b, key_col, depth, width))
 
 
 def read_sketch(spark: SparkSession, cells_root: str) -> DataFrame:
@@ -58,28 +65,11 @@ def read_sketch(spark: SparkSession, cells_root: str) -> DataFrame:
 
 
 def run_hll_available_now(spark: SparkSession, input_dir: str, out_dir: str,
-                          key_col: str, schema, p: int = HLL_P,
-                          max_files_per_trigger: int = 1) -> str:
-    """Drain available input files, writing each micro-batch's HLL
-    register table to ``registers/batch=<id>/`` (idempotent per batchId);
-    returns the registers root.  Re-running after new files land sketches
-    ONLY the new files (file-source checkpoint)."""
-    root = os.path.join(out_dir, "registers")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (hll_registers(batch_df, key_col, p)
-         .write.mode("overwrite")
-         .parquet(os.path.join(root, f"batch={batch_id}")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return root
+                          key_col: str, schema, p: int = HLL_P) -> str:
+    """HLL register table of each micro-batch under
+    ``registers/batch=<id>/``; returns the registers root."""
+    return _drain_per_batch(spark, input_dir, out_dir, schema, "registers",
+                            lambda b: hll_registers(b, key_col, p))
 
 
 def read_hll(spark: SparkSession, registers_root: str) -> DataFrame:
@@ -92,34 +82,18 @@ def read_hll(spark: SparkSession, registers_root: str) -> DataFrame:
 
 def run_hdr_available_now(spark: SparkSession, input_dir: str, out_dir: str,
                           value_col: str, schema,
-                          group_cols: list[str] | None = None,
-                          max_files_per_trigger: int = 1) -> str:
-    """Drain available input files, writing each micro-batch's HDR
-    quantile histogram to ``hist/batch=<id>/`` (idempotent per batchId);
-    returns the hist root.  Streaming quantiles with bounded state: the
-    per-batch cell table is O(64 * 2^sub_bits) rows per group however
-    many rows the batch carried, and the cnt-sum merge property makes
-    the cross-batch reader exactly the batch histogram of everything
-    ingested — where Spark's own approx_percentile cannot run as a
-    streaming aggregate at all without a state store."""
-    from ..functions.sketch import hdr_histogram
-    root = os.path.join(out_dir, "hist")
+                          group_cols: list[str] | None = None) -> str:
+    """HDR quantile histogram of each micro-batch under
+    ``hist/batch=<id>/``; returns the hist root.  Streaming quantiles with
+    bounded state: the per-batch cell table is O(64 * 2^sub_bits) rows per
+    group however many rows the batch carried, and the cnt-sum merge
+    property makes the cross-batch reader exactly the batch histogram of
+    everything ingested — where Spark's own approx_percentile cannot run
+    as a streaming aggregate at all without a state store."""
     gcols = list(group_cols or [])
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (hdr_histogram(batch_df, value_col, group_cols=gcols)
-         .write.mode("overwrite")
-         .parquet(os.path.join(root, f"batch={batch_id}")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return root
+    return _drain_per_batch(
+        spark, input_dir, out_dir, schema, "hist",
+        lambda b: hdr_histogram(b, value_col, group_cols=gcols))
 
 
 def read_hdr(spark: SparkSession, hist_root: str,
@@ -135,32 +109,15 @@ def read_hdr(spark: SparkSession, hist_root: str,
 
 
 def run_hour_counts_available_now(spark: SparkSession, input_dir: str,
-                                  out_dir: str, schema,
-                                  max_files_per_trigger: int = 1) -> str:
-    """Drain available input files, writing each micro-batch's
-    (event_type, hour_id, n) count table to ``counts/batch=<id>/``
-    (idempotent per batchId — the CMS exactly-once recipe); returns the
-    counts root.  Counts merge by cell-wise SUM, so the reader's merged
-    table equals the batch table of everything ingested regardless of
-    how events split across micro-batches or arrive out of order —
-    burst detection needs no state store and no watermark."""
-    import recrun_spark.functions.events as ev
-    root = os.path.join(out_dir, "counts")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (ev.hour_counts(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(root, f"batch={batch_id}")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return root
+                                  out_dir: str, schema) -> str:
+    """(event_type, hour_id, n) count table of each micro-batch under
+    ``counts/batch=<id>/``; returns the counts root.  Counts merge by
+    cell-wise SUM, so the reader's merged table equals the batch table of
+    everything ingested regardless of how events split across
+    micro-batches or arrive out of order — burst detection needs no state
+    store and no watermark."""
+    return _drain_per_batch(spark, input_dir, out_dir, schema, "counts",
+                            hour_counts)
 
 
 def read_bursts(spark: SparkSession, counts_root: str,
@@ -169,8 +126,7 @@ def read_bursts(spark: SparkSession, counts_root: str,
     """Merge all per-batch hour-count cells (cell-wise sum) and run the
     SAME burst window as the batch entry (events.bursts_from_hour_counts
     — shared code, semantics cannot drift)."""
-    import recrun_spark.functions.events as ev
     merged = (spark.read.parquet(os.path.join(counts_root, "batch=*"))
               .groupBy("event_type", "hour_id")
               .agg(F.sum("n").cast("long").alias("n")))
-    return ev.bursts_from_hour_counts(merged, trail_hours, burst_ratio_bp)
+    return bursts_from_hour_counts(merged, trail_hours, burst_ratio_bp)

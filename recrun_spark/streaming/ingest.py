@@ -24,17 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..readability import Settings
 from ..stage1 import DOCUMENTS_SCHEMA, extract_documents
+from .base import drain
 
 
-def stream_documents(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: Optional[int] = None
-                     ) -> DataFrame:
+def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream over a parquet document directory (files arriving over
-    time = the incremental corpus)."""
-    r = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return r.parquet(input_dir)
+    time = the incremental corpus), every available file in one batch."""
+    return spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
 
 
 def extract_stream(stream_df: DataFrame,
@@ -53,16 +49,11 @@ def run_available_now(spark: SparkSession, input_dir: str, out_dir: str,
     checkpoint records what was seen) — the streaming counterpart of the
     batch pipeline's manifest-based resume.
     """
+    sink = os.path.join(out_dir, "extractions")
     ex = extract_stream(stream_documents(spark, input_dir), settings)
-    q = (ex.writeStream
-         .format("parquet")
-         .option("path", os.path.join(out_dir, "extractions"))
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    q.awaitTermination()
+    q = drain(ex.writeStream.format("parquet").option("path", sink)
+              .outputMode("append"), out_dir)
     progress = q.lastProgress or {}
     return {"batches": progress.get("batchId", -1) + 1
             if isinstance(progress.get("batchId"), int) else None,
-            "sink": os.path.join(out_dir, "extractions")}
+            "sink": sink}

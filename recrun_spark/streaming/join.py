@@ -30,12 +30,9 @@ on ``key_col`` (symmetric hash), the plan Spark picks for any
 stream-stream equi-join.  Parquet sink + checkpoint give exactly-once
 output across restarts.
 
-Timezone discipline (same as windows.py/sessions.py): watermarks need
-TIMESTAMP (instant) columns; NTZ event times whose wall clock IS the
-true epoch are converted by PURE EPOCH ARITHMETIC, never a cast.  The
-instant columns exist only for the watermark/join predicate — the
-output carries the ORIGINAL NTZ columns, so no back-conversion and no
-session-timezone sensitivity anywhere.
+Event time: the watermark and the join predicate run on
+``base.instant`` columns; the output carries the ORIGINAL ts columns,
+so nothing converts back and nothing depends on the session timezone.
 """
 
 from __future__ import annotations
@@ -45,17 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _instant(df: DataFrame, ts_col: str, out_col: str) -> DataFrame:
-    """NTZ true-epoch wall clock -> instant via epoch arithmetic (a cast
-    would shift by the session timezone); instants pass through."""
-    from pyspark.sql.types import TimestampNTZType
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        expr = F.expr(f"timestamp_micros(timestampdiff(MICROSECOND, "
-                      f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col}))")
-    else:
-        expr = F.col(ts_col)
-    return df.withColumn(out_col, expr)
+from .base import drain, file_stream, instant
 
 
 def interval_join(left: DataFrame, right: DataFrame,
@@ -71,12 +58,16 @@ def interval_join(left: DataFrame, right: DataFrame,
 
     Every input column is emitted under its side's prefix except the
     join key (emitted once, unprefixed); ``lag_us`` (bigint MICROSECONDS,
-    left.ts - right.ts) is appended — the exact µs difference, because
-    whole-second lag functions diverge across engines on sub-second
-    components (Spark's timestampdiff(SECOND) truncates the duration,
-    DuckDB's date_diff('second') counts boundary crossings)."""
-    lw = _instant(left, ts_col, "_lts").withWatermark("_lts", delay)
-    rw = _instant(right, ts_col, "_rts").withWatermark("_rts", delay)
+    left.ts - right.ts) is appended — the exact µs difference of the two
+    instants, because whole-second lag functions diverge across engines
+    on sub-second components (Spark's timestampdiff(SECOND) truncates the
+    duration, DuckDB's date_diff('second') counts boundary crossings),
+    and ``timestampdiff`` on instants diffs session-local wall clocks,
+    which gains or loses an hour across a DST jump."""
+    lw = (left.withColumn("_lts", instant(left, ts_col))
+          .withWatermark("_lts", delay))
+    rw = (right.withColumn("_rts", instant(right, ts_col))
+          .withWatermark("_rts", delay))
     lsel = [F.col(c).alias(left_prefix + c) for c in left.columns
             if c != key_col] + [F.col(key_col), F.col("_lts")]
     rsel = [F.col(c).alias(right_prefix + c) for c in right.columns
@@ -94,8 +85,8 @@ def interval_join(left: DataFrame, right: DataFrame,
                    if c != key_col])
     return (lw.join(rw, cond)
             .select(*out_cols,
-                    F.expr("timestampdiff(MICROSECOND, _rts, _lts)")
-                    .cast("bigint").alias("lag_us")))
+                    F.expr("unix_micros(_lts) - unix_micros(_rts)")
+                    .alias("lag_us")))
 
 
 def run_interval_join_available_now(spark: SparkSession, left_dir: str,
@@ -103,26 +94,17 @@ def run_interval_join_available_now(spark: SparkSession, left_dir: str,
                                     key_col: str = "user_id",
                                     ts_col: str = "ts",
                                     max_lag: str = "1 hour",
-                                    delay: str = "10 minutes",
-                                    max_files_per_trigger: int = 1) -> str:
+                                    delay: str = "10 minutes") -> str:
     """Drain two file streams through the watermarked interval join into
     a parquet sink.  Returns the sink path.  Re-running after new files
     land on either side processes only the new files (checkpoint) and
     emits only the new matches — exactly-once via the file-sink commit
     log."""
-    def src(d):
-        return (spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", str(max_files_per_trigger))
-                .parquet(d))
-
     sink = os.path.join(out_dir, "joined")
-    q = (interval_join(src(left_dir), src(right_dir), key_col=key_col,
-                       ts_col=ts_col, max_lag=max_lag, delay=delay)
-         .writeStream.format("parquet")
-         .option("path", sink)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    joined = interval_join(file_stream(spark, schema, left_dir),
+                           file_stream(spark, schema, right_dir),
+                           key_col=key_col, ts_col=ts_col, max_lag=max_lag,
+                           delay=delay)
+    drain(joined.writeStream.format("parquet").option("path", sink)
+          .outputMode("append"), out_dir)
     return sink

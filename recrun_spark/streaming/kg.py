@@ -46,12 +46,12 @@ from ..stage1 import DOCUMENTS_SCHEMA, extract_documents
 from ..stage2 import detect_mentions, link_mentions, load_aliases
 from ..stage3 import canonicalize
 from ..stage4 import assemble_triples
+from .base import drain, file_stream
 
 
 def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
                          aliases_df: DataFrame | None = None,
-                         settings: Optional[Settings] = None,
-                         max_files_per_trigger: int = 1) -> str:
+                         settings: Optional[Settings] = None) -> str:
     """Drain available document files through the full KG flow; returns the
     triples root (one ``batch=<id>/`` parquet dir per processed batch)."""
     aliases = aliases_df if aliases_df is not None else load_aliases(spark)
@@ -75,12 +75,6 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
         # a no-op on these frames; the kgbench tracer ends the batch span here
         release_caches(trips)
 
-    stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    stream = file_stream(spark, DOCUMENTS_SCHEMA, input_dir)
+    drain(stream.writeStream.foreachBatch(handle), out_dir)
     return triples_root

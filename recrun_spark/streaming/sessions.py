@@ -57,6 +57,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .base import drain, file_stream, instant, utc_wall_clock
+
 OUTPUT_SCHEMA = ("user_id bigint, n_events bigint, "
                  "start_us bigint, end_us bigint")
 STATE_SCHEMA = ("last_us bigint, n_events bigint, start_us bigint, "
@@ -151,13 +153,9 @@ def sessionize_stream(events: DataFrame, gap_s: int = DEFAULT_GAP_S,
     """events stream -> closed sessions (OUTPUT_SCHEMA), stateful per
     user_id with an event-time timeout (bounded state).
 
-    The watermark column is derived from the (timezone-free) event time by
-    pure calendar arithmetic — epoch micros of the NTZ value as-if-UTC —
-    NOT a cast, which would interpret the wall time in the session
-    timezone: a non-UTC session would then shift the watermark clock
-    against the (naive-epoch) timeout timestamps and time sessions out too
-    early or too late."""
-    from pyspark.sql import functions as F
+    The watermark runs on ``base.instant("ts")``: a session-timezone
+    shift of the watermark clock against the (naive-epoch) timeout
+    timestamps would time sessions out too early or too late."""
     from pyspark.sql.types import TimestampNTZType
     if gap_s * 1_000_000 <= delay_ms * 1000:
         # with gap <= delay an emittable session could still hold buffered
@@ -173,12 +171,8 @@ def sessionize_stream(events: DataFrame, gap_s: int = DEFAULT_GAP_S,
         # timeout timestamps would sit tz-offset away from the (true-epoch)
         # watermark and sessions would time out hours early/late under any
         # non-UTC session.
-        events = events.withColumn("ts", F.expr(
-            "convert_timezone(current_timezone(), 'UTC', "
-            "cast(ts as timestamp_ntz))"))
-    wm_src = events.withColumn("_wm_ts", F.expr(
-        "timestamp_micros(timestampdiff(MICROSECOND, "
-        "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts))"))
+        events = events.withColumn("ts", utc_wall_clock("ts"))
+    wm_src = events.withColumn("_wm_ts", instant(events, "ts"))
     return (wm_src.withWatermark("_wm_ts", f"{delay_ms} milliseconds")
             .groupBy("user_id")
             .applyInPandasWithState(_fn_factory(gap_s * 1_000_000),
@@ -230,16 +224,9 @@ def run_sessionize_available_now(spark: SparkSession, events_dir: str,
                                  delay_ms: int = DEFAULT_DELAY_MS) -> str:
     """Drain the ranged event files through the stateful sessionizer into a
     parquet sink (exactly-once via checkpoint); returns the sink path."""
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")   # force multi-batch state
-              .parquet(events_dir))
     sink = os.path.join(out_dir, "sessions")
-    q = (sessionize_stream(stream, gap_s, delay_ms)
-         .writeStream.format("parquet")
-         .option("path", sink)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    q.awaitTermination()
+    sessions = sessionize_stream(file_stream(spark, schema, events_dir),
+                                 gap_s, delay_ms)
+    drain(sessions.writeStream.format("parquet").option("path", sink)
+          .outputMode("append"), out_dir)
     return sink

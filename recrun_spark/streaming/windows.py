@@ -38,44 +38,35 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .base import drain, file_stream, instant, utc_wall_clock
+
+
+def _finalized_counts(watermarked: DataFrame, window: str,
+                      key_col: str) -> DataFrame:
+    """Tumbling-window counts per (window, ``key_col``) over the instant
+    column ``_wm_ts``, window bounds back as true-epoch NTZ."""
+    return (watermarked
+            .groupBy(F.window(F.col("_wm_ts"), window).alias("w"),
+                     F.col(key_col))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(utc_wall_clock("w.start").alias("window_start"),
+                    utc_wall_clock("w.end").alias("window_end"),
+                    F.col(key_col), "n_events"))
+
 
 def windowed_counts(stream: DataFrame, window: str = "1 hour",
                     delay: str = "10 minutes", ts_col: str = "ts",
                     key_col: str = "event_type") -> DataFrame:
     """The windowed aggregation itself (shared by the streaming runner and
     any batch caller): tumbling ``window`` counts per (window, key) with
-    a ``delay`` watermark on ``ts_col``.
-
-    Timezone discipline (same as sessions.sessionize_stream): the
-    watermark requires a TIMESTAMP (instant) column, but the corpus
-    carries TIMESTAMP_NTZ event times whose wall clock IS the true epoch.
-    The instant is derived by PURE EPOCH ARITHMETIC (timestamp_micros of
-    the µs since the NTZ epoch), never a cast — a cast would interpret
-    the wall clock in the session timezone and shift every window under a
-    non-UTC session.  Window bounds convert back the same way, so the
-    output is NTZ true-epoch regardless of session timezone (and hourly
-    windows stay UTC-epoch-aligned, matching ``date_trunc('hour')`` in
-    the SQL oracle)."""
-    from pyspark.sql.types import TimestampNTZType
-    if isinstance(stream.schema[ts_col].dataType, TimestampNTZType):
-        wm = F.expr(f"timestamp_micros(timestampdiff(MICROSECOND, "
-                    f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col}))")
-    else:
-        wm = F.col(ts_col)
-
-    def _back(col):
-        # LTZ instant -> NTZ holding the UTC wall clock (true epoch)
-        return F.expr(f"convert_timezone(current_timezone(), 'UTC', "
-                      f"cast({col} as timestamp_ntz))")
-
-    return (stream.withColumn("_wm_ts", wm)
-            .withWatermark("_wm_ts", delay)
-            .groupBy(F.window(F.col("_wm_ts"), window).alias("w"),
-                     F.col(key_col))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(_back("w.start").alias("window_start"),
-                    _back("w.end").alias("window_end"),
-                    F.col(key_col), "n_events"))
+    a ``delay`` watermark on ``ts_col``.  The watermark runs on
+    ``base.instant(ts_col)`` and the window bounds come back through
+    ``base.utc_wall_clock``, so the output is NTZ true-epoch whatever the
+    session timezone (and hourly windows stay UTC-epoch-aligned, matching
+    ``date_trunc('hour')`` in the SQL oracle)."""
+    return _finalized_counts(
+        stream.withColumn("_wm_ts", instant(stream, ts_col))
+        .withWatermark("_wm_ts", delay), window, key_col)
 
 
 def run_windowed_counts_available_now(spark: SparkSession, input_dir: str,
@@ -83,25 +74,17 @@ def run_windowed_counts_available_now(spark: SparkSession, input_dir: str,
                                       window: str = "1 hour",
                                       delay: str = "10 minutes",
                                       ts_col: str = "ts",
-                                      key_col: str = "event_type",
-                                      max_files_per_trigger: int = 1) -> str:
+                                      key_col: str = "event_type") -> str:
     """Drain available input files through the watermarked tumbling-window
     aggregate into a parquet sink (append mode: only FINALIZED windows are
     written).  Returns the sink path.  Re-running after new files land
     processes only the new files (checkpoint) and may finalize further
     windows — exactly-once via the file-sink commit log."""
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
     sink = os.path.join(out_dir, "windows")
-    q = (windowed_counts(stream, window, delay, ts_col, key_col)
-         .writeStream.format("parquet")
-         .option("path", sink)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    counts = windowed_counts(file_stream(spark, schema, input_dir), window,
+                             delay, ts_col, key_col)
+    drain(counts.writeStream.format("parquet").option("path", sink)
+          .outputMode("append"), out_dir)
     return sink
 
 
@@ -121,33 +104,18 @@ def enriched_windowed_counts(stream: DataFrame, dim: DataFrame,
     ``stream_key == dim_key`` (inner — unmatched keys drop, the standard
     dimension-enrichment contract), then counted per (window, label).
 
-    Same NTZ→instant epoch-arithmetic discipline as windowed_counts, and
-    the SAME append-mode finalization rule (window_end <= ms-floored max
-    ts − delay, inclusive) — a stateless join cannot change when windows
+    Same event-time conversion as windowed_counts, and the SAME
+    append-mode finalization rule (window_end <= ms-floored max ts −
+    delay, inclusive) — a stateless join cannot change when windows
     finalize, which is what lets the batch join+GROUP BY serve as the
     value oracle."""
-    from pyspark.sql.types import TimestampNTZType
-    if isinstance(stream.schema[ts_col].dataType, TimestampNTZType):
-        wm = F.expr(f"timestamp_micros(timestampdiff(MICROSECOND, "
-                    f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col}))")
-    else:
-        wm = F.col(ts_col)
-
-    def _back(col):
-        return F.expr(f"convert_timezone(current_timezone(), 'UTC', "
-                      f"cast({col} as timestamp_ntz))")
-
     d = dim.select(F.col(dim_key).alias("_dk"),
                    F.col(label_col).alias("label"))
-    return (stream.withColumn("_wm_ts", wm)
-            .withWatermark("_wm_ts", delay)
-            .join(F.broadcast(d), F.col(stream_key) == F.col("_dk"))
-            .groupBy(F.window(F.col("_wm_ts"), window).alias("w"),
-                     F.col("label"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(_back("w.start").alias("window_start"),
-                    _back("w.end").alias("window_end"),
-                    "label", "n_events"))
+    return _finalized_counts(
+        stream.withColumn("_wm_ts", instant(stream, ts_col))
+        .withWatermark("_wm_ts", delay)
+        .join(F.broadcast(d), F.col(stream_key) == F.col("_dk")),
+        window, "label")
 
 
 def run_enriched_counts_available_now(spark: SparkSession, input_dir: str,
@@ -157,22 +125,14 @@ def run_enriched_counts_available_now(spark: SparkSession, input_dir: str,
                                       ts_col: str = "ts",
                                       stream_key: str = "dim_key",
                                       dim_key: str = "dim_key",
-                                      label_col: str = "label",
-                                      max_files_per_trigger: int = 1) -> str:
+                                      label_col: str = "label") -> str:
     """Drain available files through the stream-static enrichment +
     windowed aggregate into a parquet sink (append mode — finalized
     windows only; exactly-once via the file-sink commit log)."""
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
     sink = os.path.join(out_dir, "enriched")
-    q = (enriched_windowed_counts(stream, dim, window, delay, ts_col,
-                                  stream_key, dim_key, label_col)
-         .writeStream.format("parquet")
-         .option("path", sink)
-         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    counts = enriched_windowed_counts(
+        file_stream(spark, schema, input_dir), dim, window, delay, ts_col,
+        stream_key, dim_key, label_col)
+    drain(counts.writeStream.format("parquet").option("path", sink)
+          .outputMode("append"), out_dir)
     return sink

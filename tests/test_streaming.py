@@ -852,3 +852,77 @@ def test_incremental_bursts_stream_equals_batch(spark, tmpdir_path):
     got4 = rows_of(read_bursts(spark, root))
     assert got4 == rows_of(hourly_bursts(spark.read.parquet(events)))
     assert got4 != got3
+
+
+def test_event_time_rule_under_non_utc_sessions(spark):
+    """windowed_counts, enriched_windowed_counts and interval_join give the
+    UTC-session output under America/New_York and Asia/Kolkata, on NTZ and
+    on LTZ event times (batch frames, no streaming query).  The times
+    straddle New York's 2024-03-10 DST jump and Kolkata's half-hour
+    offset, so a cast anywhere in the event-time rule shows as shifted or
+    split windows, or as a wrong lag."""
+    import datetime
+
+    from recrun_spark.streaming.join import interval_join
+    from recrun_spark.streaming.windows import (enriched_windowed_counts,
+                                                windowed_counts)
+
+    def at(h, m):
+        return datetime.datetime(2024, 3, 10, h, m)
+
+    events = [(at(1, 30), 1, "a"), (at(1, 50), 2, "b"), (at(3, 30), 1, "b"),
+              (at(5, 10), 2, "a"), (at(5, 50), 2, "a"), (at(7, 0), 3, "b")]
+    purchases = [(at(3, 30), 1, "p1"), (at(5, 50), 2, "p2"),
+                 (at(7, 0), 3, "p3")]
+    clicks = [(at(1, 30), 1, "c1"), (at(3, 0), 1, "c2"),
+              (at(5, 10), 2, "c3"), (at(6, 45), 3, "c4")]
+    dim = spark.createDataFrame([("a", "A"), ("b", "B")],
+                                "dim_key string, label string")
+
+    def frame(rows, ltz):
+        if ltz:
+            utc = datetime.timezone.utc
+            rows = [(t.replace(tzinfo=utc), u, k) for t, u, k in rows]
+        kind = "timestamp" if ltz else "timestamp_ntz"
+        return spark.createDataFrame(
+            rows, f"ts {kind}, user_id bigint, dim_key string")
+
+    def outputs(ltz):
+        # built under the current session timezone: the analyzer pins it
+        ev = frame(events, ltz)
+        win = sorted(tuple(r) for r in windowed_counts(
+            ev, key_col="dim_key").collect())
+        enr = sorted(tuple(r) for r in enriched_windowed_counts(
+            ev, dim).collect())
+        joined = sorted((r["user_id"], r["l_dim_key"], r["r_dim_key"],
+                         r["lag_us"]) for r in interval_join(
+            frame(purchases, ltz), frame(clicks, ltz),
+            max_lag="90 minutes").collect())
+        return win, enr, joined
+
+    conf = "spark.sql.session.timeZone"
+    prev_tz = spark.conf.get(conf)
+    try:
+        want = {}
+        for ltz in (False, True):
+            spark.conf.set(conf, "UTC")
+            want[ltz] = outputs(ltz)
+            for tz in ("America/New_York", "Asia/Kolkata"):
+                spark.conf.set(conf, tz)
+                assert outputs(ltz) == want[ltz], (tz, ltz)
+    finally:
+        spark.conf.set(conf, prev_tz)
+
+    assert want[True] == want[False]    # the outputs hold no LTZ column
+    win, enr, joined = want[False]
+    hour = datetime.timedelta(hours=1)
+    assert win == [(at(1, 0), at(1, 0) + hour, "a", 1),
+                   (at(1, 0), at(1, 0) + hour, "b", 1),
+                   (at(3, 0), at(3, 0) + hour, "b", 1),
+                   (at(5, 0), at(5, 0) + hour, "a", 2),
+                   (at(7, 0), at(7, 0) + hour, "b", 1)]
+    assert enr == [(s, e, k.upper(), n) for s, e, k, n in win]
+    # c1 is 2 h before p1: outside the 90-minute lag
+    assert joined == [(1, "p1", "c2", 1_800_000_000),
+                      (2, "p2", "c3", 2_400_000_000),
+                      (3, "p3", "c4", 900_000_000)]
