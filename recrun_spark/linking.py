@@ -197,11 +197,8 @@ def min_label_components(nodes, edges) -> dict:
 
 
 def canonical_map(alias_rows) -> dict:
-    """entity_id -> canonical_id via union-find (single-node golden path).
-
-    The Spark pipeline computes the same map with iterative
-    large-star/small-star joins (stage3); results must be identical.
-    """
+    """entity_id -> canonical_id via union-find.  The golden generator and
+    ``stage3.canonicalize`` both build the canonical map with it."""
     entities = sorted({eid for _, eid, _ in alias_rows})
     return min_label_components(entities, same_as_edges(alias_rows))
 

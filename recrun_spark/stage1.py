@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,

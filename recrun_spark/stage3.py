@@ -2,36 +2,31 @@
 
 ``canonicalize`` turns aliases(alias, entity_id, prior) into a frozen
 ``Dictionary`` that stage 2, stage 4 and the three KG entry points share.
-The rows reach the driver once, as Arrow, for the surfaces and the digest.
-Up to ``DRIVER_MAX_ROWS`` rows the canonical map is built there too
-(``linking.canonical_map``, the golden generator's function); larger
-dictionaries take a self-equi-join on ``alias`` for the same-as edges
-(entities sharing an alias, both priors >= STRONG_PRIOR) and the
-large-star/small-star loop (``operators.connected_components``).
-Canonical id = min entity_id per component; entities with no same-as edge
-map to themselves.
+The rows reach the driver once, as one sorted Arrow table, and every part
+of the Dictionary is built there from it, at every size: the surfaces, the
+digest, the best link per alias (an Arrow argmax) and the canonical map
+(``linking.canonical_map``, the golden generator's own function: same-as
+edges between entities sharing an alias with both priors >= STRONG_PRIOR,
+canonical id = min entity_id per component, entities with no same-as edge
+map to themselves).  Once the rows sit on the driver, a distributed CC
+only adds Spark jobs: a 1.05M-row dictionary compiles here with one job,
+the transfer.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
 from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .fixtures.aliases import STRONG_PRIOR
 from .linking import canonical_map
-from .operators import connected_components
-
-# canonical map on the driver up to here (the bound of connected_components'
-# driver-local fast path); larger dictionaries take the Spark CC
-DRIVER_MAX_ROWS = 200_000
 
 CANONICAL_SCHEMA = StructType([
     StructField("entity_id", StringType()),
@@ -72,6 +67,9 @@ def _row_digest(t: pa.Table) -> bytes:
 
 def same_as_edges_df(aliases: DataFrame,
                      strong_prior: float = STRONG_PRIOR) -> DataFrame:
+    """(src, dst) same-as edges of ``linking.same_as_edges`` as a Spark
+    frame.  ``canonicalize`` does not use it: ``kgbench/run.py`` counts
+    these edges for its ``stage3.cc_edges`` metric."""
     strong = (aliases.where(F.col("prior") >= strong_prior)
               .select("alias", "entity_id").distinct())
     a, b = strong.alias("a"), strong.alias("b")
@@ -84,49 +82,39 @@ def same_as_edges_df(aliases: DataFrame,
 
 def _best_links(t: pa.Table) -> pa.Table:
     """The best row per alias — max prior, ties -> min entity_id
-    (``linking.build_link_map``'s rule, the Spark path's window argmax)."""
+    (``linking.build_link_map``'s rule)."""
     t = t.sort_by([("alias", "ascending"), ("prior", "descending"),
                    ("entity_id", "ascending")])
-    codes = pc.fill_null(
-        t.column("alias").combine_chunks().dictionary_encode().indices, -1)
-    return t.take(np.flatnonzero(np.diff(codes.to_numpy(), prepend=-2)))
+    codes = t.column("alias").combine_chunks().dictionary_encode().indices
+    return t.take(np.flatnonzero(np.diff(codes.to_numpy(), prepend=-1)))
 
 
 def canonicalize(aliases: DataFrame,
                  broadcast_max_rows: int = 1_000_000) -> Dictionary:
-    """aliases(alias, entity_id, prior) -> Dictionary."""
+    """aliases(alias, entity_id, prior) -> Dictionary.  ``broadcast_max_rows``
+    only sets ``small``; a null in any column raises ``ValueError``."""
     spark = aliases.sparkSession
     rows = aliases.select("alias", "entity_id", "prior")
     # ONE Arrow transfer of the rows, sorted on the driver: the surfaces
     # must reach the driver for the automaton anyway.  On 4 cores (150k to
     # 1.2M rows) this costs no more than a distinct-surface collect, while
     # a Spark sort plus a Row iterator for the digest was 1.5-1.8x slower
-    t = rows.toArrow().sort_by([(c, "ascending") for c in rows.columns])
+    t = rows.toArrow()
+    nulls = [f"{c} ({t.column(c).null_count} rows)" for c in rows.columns
+             if t.column(c).null_count]
+    if nulls:
+        raise ValueError("alias dictionary has nulls in " + ", ".join(nulls))
+    t = t.sort_by([(c, "ascending") for c in rows.columns])
     surfaces = tuple(pc.unique(t.column("alias")).to_pylist())
-    if t.num_rows <= min(DRIVER_MAX_ROWS, broadcast_max_rows):
-        # both frames are local relations built from Arrow: no Spark job
-        # to scan, broadcast or write them (a list-built frame is an RDD)
-        links = spark.createDataFrame(_best_links(t), rows.schema)
-        probe = list(zip(*(t.column(c).to_pylist() for c in rows.columns)))
-        ids = sorted(canonical_map(probe).items())
-        canonical = spark.createDataFrame(pa.table(
-            [pa.array([e for e, _ in ids], pa.string()),
-             pa.array([c for _, c in ids], pa.string())],
-            names=CANONICAL_SCHEMA.names), CANONICAL_SCHEMA)
-    else:
-        # argmax per alias is doc-independent: reduce the dictionary once
-        # (|aliases| rows), not per mention (|mentions| rows)
-        w = (Window.partitionBy("alias")
-             .orderBy(F.col("prior").desc(), F.col("entity_id").asc()))
-        links = (rows.withColumn("_rn", F.row_number().over(w))
-                 .where(F.col("_rn") == 1).drop("_rn"))
-        comp = connected_components(same_as_edges_df(aliases), "src", "dst")
-        canonical = (aliases.select("entity_id").distinct()
-                     .join(comp.withColumnRenamed("node", "entity_id"),
-                           "entity_id", "left")
-                     .select("entity_id",
-                             F.coalesce("component", "entity_id")
-                             .alias("canonical_id")))
+    # both frames are local relations built from Arrow: no Spark job
+    # to scan, broadcast or write them (a list-built frame is an RDD)
+    links = spark.createDataFrame(_best_links(t), rows.schema)
+    probe = list(zip(*(t.column(c).to_pylist() for c in rows.columns)))
+    ids = sorted(canonical_map(probe).items())
+    canonical = spark.createDataFrame(pa.table(
+        [pa.array([e for e, _ in ids], pa.string()),
+         pa.array([c for _, c in ids], pa.string())],
+        names=CANONICAL_SCHEMA.names), CANONICAL_SCHEMA)
     return Dictionary(surfaces=surfaces, digest=_row_digest(t), links=links,
                       canonical=canonical,
                       small=t.num_rows <= broadcast_max_rows)

@@ -11,7 +11,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 @pytest.fixture(scope="session")
 def spark():
     from recrun_spark.session import get_spark
-    s = get_spark("recrun_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("recrun_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

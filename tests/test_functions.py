@@ -83,10 +83,9 @@ def test_near_dups_bucketed_recall_vs_exact(spark):
 def test_stage2_salted_path_equivalence(spark, corpus_parquet):
     """Forcing the salted repartition-join must produce byte-identical
     linking to the broadcast path (skew handling is a physical choice,
-    not a semantic one).  The broadcast side runs on the driver-built
-    Dictionary, the salted side on the Spark-built one
-    (``broadcast_max_rows=0``), so the two dictionary paths are checked
-    against each other too."""
+    not a semantic one).  Both Dictionaries are built on the driver and
+    differ only in ``small`` (``broadcast_max_rows=0`` on the salted
+    side)."""
     from recrun_spark.stage1 import extract_documents
     from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
     from recrun_spark.stage3 import canonicalize

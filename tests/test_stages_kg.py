@@ -76,22 +76,18 @@ def _random_dictionary(seed=3):
     return rows
 
 
-def test_canonicalize_matches_golden(spark, monkeypatch):
-    """All three Dictionary paths — built on the driver (the default at
-    this size), in Spark with the broadcast link (``DRIVER_MAX_ROWS=0``)
-    and in Spark with the salted one (``broadcast_max_rows=0``) — equal the
-    single-node linking rules on the fixture dictionary and a random one."""
+def test_canonicalize_matches_golden(spark):
+    """The Dictionary, built on the driver for the broadcast link join and
+    for the salted one (``broadcast_max_rows=0``), equals the single-node
+    linking rules on the fixture dictionary and a random one."""
     from recrun_spark import stage3
     from recrun_spark.fixtures.aliases import make_aliases
     from recrun_spark.linking import build_link_map, canonical_map
     from recrun_spark.stage2 import load_aliases
-    driver_max = stage3.DRIVER_MAX_ROWS
     for rows in (make_aliases(42), _random_dictionary()):
         aliases = load_aliases(spark, rows)
         digests, link_rows = set(), set()
-        for cap, limit in ((driver_max, 1_000_000), (0, 1_000_000),
-                           (driver_max, 0)):
-            monkeypatch.setattr(stage3, "DRIVER_MAX_ROWS", cap)
+        for limit in (1_000_000, 0):
             d = stage3.canonicalize(aliases, broadcast_max_rows=limit)
             assert d.small == (limit > 0)
             assert d.surfaces == tuple(sorted({r[0] for r in rows}))
@@ -104,8 +100,38 @@ def test_canonicalize_matches_golden(spark, monkeypatch):
             assert d.links.columns == ["alias", "entity_id", "prior"]
             link_rows.add(tuple(sorted(map(tuple, links))))
             digests.add(d.digest)
-        # full best rows, prior included, are the same on every path
+        # full best rows, prior included, are the same for both sizes
         assert len(digests) == 1 and len(link_rows) == 1
+
+
+def test_canonicalize_rejects_null_rows(spark):
+    """A null in any dictionary column fails ``canonicalize`` with one
+    ValueError naming the column and its null count, before any stage
+    runs on it."""
+    import pyarrow as pa
+
+    from recrun_spark.stage2 import ALIAS_SCHEMA
+    from recrun_spark.stage3 import canonicalize
+    for col in ALIAS_SCHEMA.names:
+        cols = {"alias": ["alpha", "beta", "gamma"],
+                "entity_id": ["E1", "E2", "E3"], "prior": [0.9, 0.8, 0.5]}
+        cols[col][0] = cols[col][2] = None
+        with pytest.raises(ValueError, match=rf"{col} \(2 rows\)"):
+            canonicalize(spark.createDataFrame(pa.table(cols), ALIAS_SCHEMA))
+
+
+def test_stage_modules_import_without_pandas():
+    """Python workers import ``recrun_spark.stage1`` and ``stage2`` for
+    every stage-1 and stage-2 task; neither needs pandas.  A subprocess,
+    because in-session workers are reused across tests."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "import recrun_spark.stage1, recrun_spark.stage2; "
+            "assert 'pandas' not in sys.modules")
+    subprocess.run([sys.executable, "-c", code, root], check=True)
 
 
 def test_load_aliases_rows_and_schema(spark):
@@ -235,6 +261,8 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
     built = []
     assert jobs("canonicalize", lambda: built.append(
         canonicalize(load_aliases(spark)))) == 1
+    assert jobs("canonicalize, salted size", lambda: canonicalize(
+        load_aliases(spark), broadcast_max_rows=0)) == 1
     d = built[0]
     assert jobs("dictionary frames", lambda: (
         load_aliases(spark).collect(), d.links.collect(),
