@@ -8,7 +8,7 @@ Rules (fixed; shared by the golden generator and the Spark pipeline):
   BOTH priors for that alias are >= ``STRONG_PRIOR`` (0.8) — ambiguous
   (weak) shared aliases do NOT merge clusters;
 * a deliberately skewed head alias (``orion``) accounts for >30% of all
-  generated mentions, to exercise salted joins (SURVEY.md §4).
+  generated mentions: the hot join key (SURVEY.md §4).
 """
 
 from __future__ import annotations

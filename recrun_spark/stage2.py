@@ -17,8 +17,10 @@ Scale design:
 * **Entity-link scoring is a broadcast hash join** against the
   dictionary's best link per alias (``F.broadcast``) — all JVM-side.
 * **Skew**: the head alias (>30% of mentions) is harmless under a broadcast
-  join (no shuffle by alias).  A dictionary past the broadcast limit
-  (``Dictionary.small`` false) takes ``salted_join`` (operators.py).
+  join (no shuffle by alias).  The broadcast is bounded by what the
+  workers already hold: ``detect_mentions`` ships every surface to every
+  Python worker, and ``links`` has one row per surface, so a dictionary
+  whose matcher the workers can build fits the link broadcast too.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
 from .linking import build_alias_pattern, find_mentions
-from .operators import salted_join
 
 # worker-local matcher: Python workers are reused across tasks
 # (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
@@ -108,20 +109,15 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     return src.mapInArrow(fn, schema=MENTION_SCHEMA)
 
 
-def link_mentions(mentions: DataFrame, dictionary,
-                  salt_buckets: int = 16) -> DataFrame:
+def link_mentions(mentions: DataFrame, dictionary) -> DataFrame:
     """Join mentions to the dictionary's best link per alias (max prior,
-    ties -> min entity_id: linking.build_link_map).
+    ties -> min entity_id: linking.build_link_map), broadcast.
 
     Returns (doc_id, surface, span_offset, start, entity_id, prior).
     """
     best = dictionary.links
-    if dictionary.small:
-        joined = mentions.join(F.broadcast(best),
-                               mentions["surface"] == best["alias"], "inner")
-    else:
-        joined = salted_join(mentions, best, "surface", "alias",
-                             buckets=salt_buckets)
+    joined = mentions.join(F.broadcast(best),
+                           mentions["surface"] == best["alias"], "inner")
     return joined.select("doc_id", "surface", "span_offset", "start",
                          "entity_id", "prior")
 

@@ -10,7 +10,8 @@ edges between entities sharing an alias with both priors >= STRONG_PRIOR,
 canonical id = min entity_id per component, entities with no same-as edge
 map to themselves).  Once the rows sit on the driver, a distributed CC
 only adds Spark jobs: a 1.05M-row dictionary compiles here with one job,
-the transfer.
+the transfer.  A blank alias would match at every word boundary, so it
+is rejected here with null fields.
 """
 
 from __future__ import annotations
@@ -38,13 +39,12 @@ CANONICAL_SCHEMA = StructType([
 class Dictionary:
     """``surfaces``: sorted distinct aliases; ``digest``: ``_row_digest`` of
     the sorted rows (matcher-cache key, resume fingerprint); ``links``:
-    best (alias, entity_id, prior) per alias; ``canonical``: (entity_id,
-    canonical_id); ``small``: stage 2 broadcasts ``links``."""
+    best (alias, entity_id, prior) per alias, the side stage 2 broadcasts;
+    ``canonical``: (entity_id, canonical_id)."""
     surfaces: tuple
     digest: bytes
     links: DataFrame
     canonical: DataFrame
-    small: bool
 
 
 def _row_digest(t: pa.Table) -> bytes:
@@ -89,10 +89,9 @@ def _best_links(t: pa.Table) -> pa.Table:
     return t.take(np.flatnonzero(np.diff(codes.to_numpy(), prepend=-1)))
 
 
-def canonicalize(aliases: DataFrame,
-                 broadcast_max_rows: int = 1_000_000) -> Dictionary:
-    """aliases(alias, entity_id, prior) -> Dictionary.  ``broadcast_max_rows``
-    only sets ``small``; a null in any column raises ``ValueError``."""
+def canonicalize(aliases: DataFrame) -> Dictionary:
+    """aliases(alias, entity_id, prior) -> Dictionary.  A null in any
+    column or a blank alias raises ``ValueError``."""
     spark = aliases.sparkSession
     rows = aliases.select("alias", "entity_id", "prior")
     # ONE Arrow transfer of the rows, sorted on the driver: the surfaces
@@ -100,10 +99,14 @@ def canonicalize(aliases: DataFrame,
     # 1.2M rows) this costs no more than a distinct-surface collect, while
     # a Spark sort plus a Row iterator for the digest was 1.5-1.8x slower
     t = rows.toArrow()
-    nulls = [f"{c} ({t.column(c).null_count} rows)" for c in rows.columns
-             if t.column(c).null_count]
-    if nulls:
-        raise ValueError("alias dictionary has nulls in " + ", ".join(nulls))
+    bad = [f"nulls in {c} ({t.column(c).null_count} rows)"
+           for c in rows.columns if t.column(c).null_count]
+    blank = pc.sum(pc.equal(pc.utf8_length(pc.utf8_trim_whitespace(
+        t.column("alias"))), 0)).as_py()
+    if blank:
+        bad.append(f"blank aliases ({blank} rows)")
+    if bad:
+        raise ValueError("alias dictionary has " + ", ".join(bad))
     t = t.sort_by([(c, "ascending") for c in rows.columns])
     surfaces = tuple(pc.unique(t.column("alias")).to_pylist())
     # both frames are local relations built from Arrow: no Spark job
@@ -116,5 +119,4 @@ def canonicalize(aliases: DataFrame,
          pa.array([c for _, c in ids], pa.string())],
         names=CANONICAL_SCHEMA.names), CANONICAL_SCHEMA)
     return Dictionary(surfaces=surfaces, digest=_row_digest(t), links=links,
-                      canonical=canonical,
-                      small=t.num_rows <= broadcast_max_rows)
+                      canonical=canonical)

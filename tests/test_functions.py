@@ -1,7 +1,7 @@
 """Invariant and quality tests for the training-data operators (beyond the
 per-query DuckDB value oracles in test_entry_queries.py): signature
 invariants, dedup/ANN recall vs exact baselines, multimodal determinism,
-and the stage-2 salted-join path."""
+and the stage-2 link rule under a skewed head alias."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,35 +81,36 @@ def test_near_dups_bucketed_recall_vs_exact(spark):
 
 
 def test_stage2_salted_path_equivalence(spark, corpus_parquet):
-    """Forcing the salted repartition-join must produce byte-identical
-    linking to the broadcast path (skew handling is a physical choice,
-    not a semantic one).  Both Dictionaries are built on the driver and
-    differ only in ``small`` (``broadcast_max_rows=0`` on the salted
-    side)."""
+    """Linking is a rule, not a physical choice: every detected mention is
+    linked exactly once, to the single-node best row of its surface
+    (``linking.build_link_map``: max prior, ties -> min entity_id) and
+    that row's prior.  The salted join the name refers to had to match
+    this rule; the broadcast join is now the only path."""
+    from recrun_spark.fixtures.aliases import make_aliases
+    from recrun_spark.linking import build_link_map
     from recrun_spark.stage1 import extract_documents
     from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
     from recrun_spark.stage3 import canonicalize
     docs = spark.read.parquet(corpus_parquet).limit(50)
-    aliases = load_aliases(spark)
-    driver = canonicalize(aliases)
-    distributed = canonicalize(aliases, broadcast_max_rows=0)
-    assert driver.small and not distributed.small
-    assert (driver.surfaces, driver.digest) == (distributed.surfaces,
-                                                distributed.digest)
+    rows = make_aliases(42)
+    d = canonicalize(load_aliases(spark, rows))
+    best = {a: (e, max(float(p) for b, f, p in rows if (b, f) == (a, e)))
+            for a, e in build_link_map(rows).items()}
     ex = extract_documents(docs).persist()
-    cols = ["doc_id", "surface", "span_offset", "start", "entity_id", "prior"]
-    broadcasted = sorted(map(tuple, link_mentions(
-        detect_mentions(ex, driver), driver).select(*cols).collect()))
-    salted = sorted(map(tuple, link_mentions(
-        detect_mentions(ex, distributed), distributed, salt_buckets=7)
-        .select(*cols).collect()))
-    assert broadcasted == salted and len(broadcasted) > 0
+    mentions = detect_mentions(ex, d)
+    keys = ["doc_id", "surface", "span_offset", "start"]
+    linked = link_mentions(mentions, d).select(
+        *keys, "entity_id", "prior").collect()
+    assert sorted(tuple(r[:4]) for r in linked) == sorted(
+        map(tuple, mentions.select(*keys).collect()))
+    assert linked and all((r["entity_id"], r["prior"]) == best[r["surface"]]
+                          for r in linked)
     ex.unpersist()
 
 
 def test_head_alias_skew_share(spark, corpus_parquet):
     """FIXTURES.md §2 invariant: the head alias accounts for >30% of all
-    mentions — the skew the salted join / AQE skew handling is sized for."""
+    mentions — the hot key the broadcast link join never shuffles."""
     from pyspark.sql import functions as F
 
     from recrun_spark.fixtures.aliases import head_alias
@@ -147,8 +148,8 @@ def _blob_corpus(spark, n_blobs=8, per_blob=50, dim=16, seed=11):
 def test_skew_corpus_profile():
     """The skew stress corpus (generator skew=True) holds its invariants:
     the head alias carries >50% of all mentions and document lengths are
-    power-law (p99 length ≥ 5x the median) — the profile the salted-join /
-    AQE-skew bench entry (kg_pipeline_skewed) and plan audit rely on.
+    power-law (p99 length ≥ 5x the median) — the profile the skew plan
+    audit (stage2_link_mentions_skew) relies on.
     Pure Python (no Spark): the same make_doc the Spark generators call."""
     from recrun_spark.fixtures.aliases import head_alias, make_aliases
     from recrun_spark.fixtures.generator import make_corpus

@@ -77,46 +77,41 @@ def _random_dictionary(seed=3):
 
 
 def test_canonicalize_matches_golden(spark):
-    """The Dictionary, built on the driver for the broadcast link join and
-    for the salted one (``broadcast_max_rows=0``), equals the single-node
-    linking rules on the fixture dictionary and a random one."""
+    """The Dictionary equals the single-node linking rules on the fixture
+    dictionary and a random one."""
     from recrun_spark import stage3
     from recrun_spark.fixtures.aliases import make_aliases
     from recrun_spark.linking import build_link_map, canonical_map
     from recrun_spark.stage2 import load_aliases
     for rows in (make_aliases(42), _random_dictionary()):
-        aliases = load_aliases(spark, rows)
-        digests, link_rows = set(), set()
-        for limit in (1_000_000, 0):
-            d = stage3.canonicalize(aliases, broadcast_max_rows=limit)
-            assert d.small == (limit > 0)
-            assert d.surfaces == tuple(sorted({r[0] for r in rows}))
-            assert {r["entity_id"]: r["canonical_id"]
-                    for r in d.canonical.collect()} == canonical_map(rows)
-            links = d.links.collect()
-            assert len(links) == len(d.surfaces)
-            assert {r["alias"]: r["entity_id"]
-                    for r in links} == build_link_map(rows)
-            assert d.links.columns == ["alias", "entity_id", "prior"]
-            link_rows.add(tuple(sorted(map(tuple, links))))
-            digests.add(d.digest)
-        # full best rows, prior included, are the same for both sizes
-        assert len(digests) == 1 and len(link_rows) == 1
+        d = stage3.canonicalize(load_aliases(spark, rows))
+        assert d.surfaces == tuple(sorted({r[0] for r in rows}))
+        assert {r["entity_id"]: r["canonical_id"]
+                for r in d.canonical.collect()} == canonical_map(rows)
+        links = d.links.collect()
+        assert len(links) == len(d.surfaces)
+        assert {r["alias"]: r["entity_id"]
+                for r in links} == build_link_map(rows)
+        assert d.links.columns == ["alias", "entity_id", "prior"]
 
 
 def test_canonicalize_rejects_null_rows(spark):
-    """A null in any dictionary column fails ``canonicalize`` with one
-    ValueError naming the column and its null count, before any stage
-    runs on it."""
+    """A null in any dictionary column, or an empty or whitespace-only
+    alias (it would match at every word boundary), fails ``canonicalize``
+    with one ValueError naming the fault and its row count, before any
+    stage runs on it."""
     import pyarrow as pa
 
     from recrun_spark.stage2 import ALIAS_SCHEMA
     from recrun_spark.stage3 import canonicalize
-    for col in ALIAS_SCHEMA.names:
+    cases = [(c, (None, None), rf"nulls in {c} \(2 rows\)")
+             for c in ALIAS_SCHEMA.names]
+    cases.append(("alias", ("", " \t"), r"blank aliases \(2 rows\)"))
+    for col, (first, last), msg in cases:
         cols = {"alias": ["alpha", "beta", "gamma"],
                 "entity_id": ["E1", "E2", "E3"], "prior": [0.9, 0.8, 0.5]}
-        cols[col][0] = cols[col][2] = None
-        with pytest.raises(ValueError, match=rf"{col} \(2 rows\)"):
+        cols[col][0], cols[col][2] = first, last
+        with pytest.raises(ValueError, match=msg):
             canonicalize(spark.createDataFrame(pa.table(cols), ALIAS_SCHEMA))
 
 
@@ -261,8 +256,6 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
     built = []
     assert jobs("canonicalize", lambda: built.append(
         canonicalize(load_aliases(spark)))) == 1
-    assert jobs("canonicalize, salted size", lambda: canonicalize(
-        load_aliases(spark), broadcast_max_rows=0)) == 1
     d = built[0]
     assert jobs("dictionary frames", lambda: (
         load_aliases(spark).collect(), d.links.collect(),
@@ -281,10 +274,23 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
 
     # mention detection is a pure map: a one-partition input (the stream's
     # one-file micro-batch) is matched where it is, with no exchange
-    from recrun_spark.stage2 import detect_mentions
+    from recrun_spark.stage2 import detect_mentions, link_mentions
     mentions = detect_mentions(_stage4_inputs(spark)[1].coalesce(1), d)
     plan = mentions._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+    # and linking broadcasts the dictionary's best links by its hint, with
+    # no hash shuffle (size-based auto-broadcast off, so the fixture's
+    # small size cannot stand in for the hint)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = link_mentions(mentions, d)._jdf.queryExecution() \
+            .executedPlan().toString()
+    finally:
+        spark.conf.set(key, threshold)
+    assert "BroadcastExchange" in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def _zip_module(path, source):
