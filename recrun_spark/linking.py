@@ -9,7 +9,9 @@ measures the distributed implementation, not rule drift.
 
 Rules:
 * mention = longest-match alias hit, left-to-right non-overlapping, on the
-  lowercased text of each retained ``text`` span, at word boundaries;
+  lowercased text of each retained ``text`` span, at word boundaries —
+  the matches of ``\\b(?:longest|...|shortest)\\b``, found by one
+  ``TrieMatcher`` for every dictionary;
 * link = alias → candidate entity with max prior (ties → min entity_id);
 * same-as edge = two entities sharing an alias where both priors >= 0.8
   (``aliases.STRONG_PRIOR``); canonical id = min entity_id in the connected
@@ -29,18 +31,7 @@ from .fixtures.aliases import STRONG_PRIOR
 
 
 _RE_WORD_CHAR = re.compile(r"\w")
-_RE_TOKEN = re.compile(r"\w+")
 _WORD_CACHE: dict = {}
-
-# above this many surfaces, build_alias_pattern returns a TrieMatcher: a
-# regex alternation degrades to O(alternatives) per position (sre has no
-# Aho-Corasick), while the trie costs one dict probe per token start plus
-# a walk bounded by the longest alias.  Crossover MEASURED on fixture text
-# (min-of-3 per level): 5 surfaces regex 2.9x faster, 64 surfaces ~even,
-# 167 surfaces trie 1.9x faster — threshold set past the crossover.  Both
-# paths are differentially fuzzed to identical semantics (the goldens are
-# path-independent; regenerated byte-identical after this change).
-TRIE_MIN_SURFACES = 96
 
 
 def _is_word(ch: str) -> bool:
@@ -51,31 +42,30 @@ def _is_word(ch: str) -> bool:
 
 
 class TrieMatcher:
-    """Trie-based longest-match scanner with semantics IDENTICAL to the
-    regex path (``\\b(?:longest|...|shortest)\\b`` + ``finditer``):
-    leftmost scan, at each start the longest alias whose trailing word
-    boundary holds, non-overlapping (resume at match end).
+    """Trie-based longest-match scanner with the semantics of the regex
+    ``\\b(?:longest|...|shortest)\\b`` + ``finditer``: leftmost scan, at
+    each start the longest alias whose trailing word boundary holds,
+    non-overlapping (resume at match end).
 
-    Matching starts only at token starts (``\\w+`` boundaries), which is
-    exactly where ``\\b<word-char>`` can match — hence the constructor
-    requires every surface to start AND end with a word character (other
-    surfaces fall back to the regex path in build_alias_pattern).
+    A surface can start only where ``\\b`` holds before its first
+    character: at a token start (a word first character), or at a
+    non-word character right after a word character.  The start scanner
+    enumerates exactly those positions for the first characters the
+    dictionary has, so on a word-only dictionary it is plain ``\\w+``.
+    Cost is one dict probe per start plus a walk bounded by the longest
+    alias, whatever the dictionary's size or alphabet.
 
-    Differential-fuzzed against the regex path (tests/test_properties.py);
-    verified within the same parity suite as the reference-derived rules.
+    Differential-fuzzed against the regex (tests/test_properties.py).
     """
 
-    __slots__ = ("root", "n_surfaces")
+    __slots__ = ("root", "starts")
     _END = ""  # terminal marker key — single chars can never collide
 
     def __init__(self, surfaces):
         root: dict = {}
-        n = 0
-        for s in sorted(set(surfaces)):
-            if not s or not _is_word(s[0]) or not _is_word(s[-1]):
-                raise ValueError(
-                    f"TrieMatcher requires surfaces that start and end with "
-                    f"a word character, got {s!r} — use the regex path")
+        for s in surfaces:
+            if not s:
+                continue  # an empty surface is no mention
             node = root
             for ch in s:
                 nxt = node.get(ch)
@@ -83,9 +73,11 @@ class TrieMatcher:
                     nxt = node[ch] = {}
                 node = nxt
             node[self._END] = True
-            n += 1
         self.root = root
-        self.n_surfaces = n
+        nonword_firsts = "".join(sorted(c for c in root if not _is_word(c)))
+        self.starts = re.compile(
+            r"\w+" + (r"|(?<=\w)[" + re.escape(nonword_firsts) + "]"
+                      if nonword_firsts else ""))
 
     def find(self, low: str):
         """[(surface, start)] over already-lowercased text."""
@@ -94,7 +86,7 @@ class TrieMatcher:
         isw = _is_word
         n = len(low)
         resume = 0
-        for m in _RE_TOKEN.finditer(low):
+        for m in self.starts.finditer(low):
             i = m.start()
             if i < resume:
                 continue
@@ -119,30 +111,16 @@ class TrieMatcher:
         return out
 
 
-def build_alias_pattern(surfaces, trie_min: int | None = None):
-    """Longest-match matcher with word boundaries over lowercased text.
-
-    Returns a compiled regex (small dictionaries — C-speed alternation,
-    byte-identical to the golden-fixture generator) or a TrieMatcher (large
-    dictionaries — linear in text, not in |dictionary|).  Both implement
-    the same semantics; ``find_mentions`` accepts either.
-    """
-    ordered = sorted(set(surfaces), key=lambda s: (-len(s), s))
-    threshold = TRIE_MIN_SURFACES if trie_min is None else trie_min
-    if (len(ordered) >= threshold
-            and all(s and _is_word(s[0]) and _is_word(s[-1])
-                    for s in ordered)):
-        return TrieMatcher(ordered)
-    return re.compile(r"\b(?:" + "|".join(re.escape(s) for s in ordered)
-                      + r")\b")
+def build_alias_pattern(surfaces):
+    """Longest-match matcher with word boundaries over lowercased text:
+    one ``TrieMatcher`` for every dictionary (an empty one matches
+    nothing)."""
+    return TrieMatcher(surfaces)
 
 
 def find_mentions(text: str, pattern):
     """[(surface, start)] — non-overlapping, left-to-right, longest-first."""
-    low = text.lower()
-    if isinstance(pattern, TrieMatcher):
-        return pattern.find(low)
-    return [(m.group(0), m.start()) for m in pattern.finditer(low)]
+    return pattern.find(text.lower())
 
 
 def build_link_map(alias_rows) -> dict:

@@ -18,17 +18,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _submit_master():
-    """Master already provided by spark-submit (java system property
-    spark.master reaches PySpark via SparkConf) — None when absent."""
-    try:
-        from pyspark import SparkConf
-        m = SparkConf().get("spark.master", None)
-        return m
-    except Exception:
-        return None
-
-
 def _prune_dead_process_dirs() -> None:
     """Best-effort cleanup of per-process warehouse/derby dirs left by
     sessions whose process is gone — per-PID paths avoid cross-session
@@ -88,9 +77,11 @@ def get_spark(app_name: str = "recrun_spark", cpus: int | None = None,
         ":" + os.environ["PYTHONPATH"] if os.environ.get("PYTHONPATH") else "")
     b = SparkSession.builder.appName(app_name)
     # honor an externally-provided master (spark-submit --master yarn/k8s):
-    # builder.master() would silently override it and run single-node
-    external_master = os.environ.get("SPARK_MASTER") or _submit_master()
-    if external_master is None:
+    # builder.master() would silently override it and run single-node.
+    # spark-submit starts the JVM first and hands the Python driver its
+    # gateway port, so PYSPARK_GATEWAY_PORT marks a submitted driver
+    if not (os.environ.get("SPARK_MASTER")
+            or "PYSPARK_GATEWAY_PORT" in os.environ):
         b = b.master(f"local[{cpus}]")
         # local mode: the driver heap IS the executor heap
         b = b.config("spark.driver.memory",

@@ -34,8 +34,8 @@ from pyspark.sql.types import (DoubleType, IntegerType, StringType,
 from .linking import build_alias_pattern, find_mentions
 
 # worker-local matcher: Python workers are reused across tasks
-# (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
-# once per worker process instead of once per task.  One slot, keyed by
+# (spark.python.worker.reuse), so the TrieMatcher is built once per
+# worker process instead of once per task.  One slot, keyed by
 # the dictionary DIGEST shipped with the task: every call uses one
 # dictionary, and a new digest replaces (frees) the old matcher.
 _MATCHER: tuple = (None, None)  # (digest, pattern)
@@ -80,13 +80,11 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
         from .stage1 import _unpack_spans_batch
         pattern = _cached_pattern(key, bc.value)  # built once per worker
         for batch in batches:
-            doc_ids, kinds, texts, _refs, offs, bounds = \
+            doc_ids, _kinds, texts, _refs, offs, bounds = \
                 _unpack_spans_batch(batch, "retained_spans")
             o_doc, o_surf, o_off, o_start = [], [], [], []
             for i in range(len(doc_ids)):
                 for j in range(bounds[i], bounds[i + 1]):
-                    if kinds[j] != "text" or not texts[j]:
-                        continue
                     for surface, start in find_mentions(texts[j], pattern):
                         o_doc.append(doc_ids[i])
                         o_surf.append(surface)
@@ -97,11 +95,10 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
                  pa.array(o_off, pa.int32()), pa.array(o_start, pa.int32())],
                 schema=out_schema)
 
-    # ship only the spans the automaton consumes: the Python loop skips
-    # every non-text/empty span anyway, so filtering the array JVM-side
-    # is semantics-identical and cuts the Arrow transport (img/link/
-    # header spans never cross the boundary); span_offset rides in the
-    # struct, unaffected by the filter
+    # ship only the spans the automaton consumes (non-empty text spans):
+    # the filter runs JVM-side, so img/link/header spans never cross the
+    # Arrow boundary and the Python loop needs no check of its own;
+    # span_offset rides in the struct, unaffected by the filter
     src = extractions.selectExpr(
         "doc_id",
         "filter(retained_spans, s -> s.kind = 'text' AND s.text != '')"

@@ -56,22 +56,27 @@ def test_media_retention_invariant(ix):
 @settings(max_examples=120, deadline=None)
 @given(seed=st.integers(min_value=0, max_value=10**9))
 def test_trie_matcher_matches_regex_semantics(seed):
-    """Differential fuzz: the TrieMatcher (large-dictionary path) must agree
-    with the regex alternation (small-dictionary / golden-fixture path) on
-    every (dictionary, text) — same matches, same offsets, same order."""
+    """Differential fuzz: the engine's one matcher (``TrieMatcher``) must
+    agree with the regex alternation ``\\b(?:longest|...|shortest)\\b``
+    that specifies it, on every (dictionary, text) — same matches, same
+    offsets, same order — including surfaces that start or end with a
+    non-word character."""
     import random
+    import re
 
     from recrun_spark.linking import (TrieMatcher, build_alias_pattern,
                                       find_mentions)
     rng = random.Random(seed)
     base = ["orion", "corp", "vega", "nova", "data", "x1", "éclair",
-            "co_op", "mail", "e-mail", "alpha", "7even", "a"]
+            "co_op", "mail", "e-mail", "alpha", "7even", "a",
+            "c++", ".net", "--", "u.s.", "+"]
     surfaces = set()
     for _ in range(rng.randrange(1, 12)):
-        surfaces.add(" ".join(rng.choice(base)
-                              for _ in range(rng.randrange(1, 4))))
-    regex = build_alias_pattern(surfaces, trie_min=10**9)   # force regex
-    trie = build_alias_pattern(surfaces, trie_min=1)        # force trie
+        surfaces.add(rng.choice([" ", "", "-"]).join(
+            rng.choice(base) for _ in range(rng.randrange(1, 4))))
+    ordered = sorted(surfaces, key=lambda s: (-len(s), s))
+    regex = re.compile(r"\b(?:" + "|".join(map(re.escape, ordered)) + r")\b")
+    trie = build_alias_pattern(surfaces)
     assert isinstance(trie, TrieMatcher)
 
     pieces = []
@@ -84,7 +89,8 @@ def test_trie_matcher_matches_regex_semantics(seed):
         else:
             pieces.append(rng.choice(["...", "—", "7", "_", "FooBar", "co",
                                       "orionx", "xorion", "ÉCLAIR", "", "é"]))
-        pieces.append(rng.choice([" ", "  ", ", ", ".", "-", "\n", ""]))
+        pieces.append(rng.choice([" ", "  ", ", ", ".", "-", "\n", "", "+",
+                                  "!"]))
     text = "".join(pieces)
-    assert find_mentions(text, regex) == find_mentions(text, trie), \
-        (sorted(surfaces), text)
+    expected = [(m.group(0), m.start()) for m in regex.finditer(text.lower())]
+    assert find_mentions(text, trie) == expected, (ordered, text)

@@ -131,14 +131,22 @@ def test_stage_modules_import_without_pandas():
 
 def test_load_aliases_rows_and_schema(spark):
     """The Arrow-built alias frame holds the fixture rows in order, with
-    priors as doubles, under ALIAS_SCHEMA."""
+    priors as doubles, under ALIAS_SCHEMA.  An empty one compiles to a
+    dictionary that yields no mentions (an empty alternation would match
+    at every word boundary)."""
     from recrun_spark.fixtures.aliases import make_aliases
-    from recrun_spark.stage2 import ALIAS_SCHEMA, load_aliases
+    from recrun_spark.linking import build_alias_pattern, find_mentions
+    from recrun_spark.stage2 import (ALIAS_SCHEMA, detect_mentions,
+                                     load_aliases)
+    from recrun_spark.stage3 import canonicalize
     df = load_aliases(spark)
     assert df.schema == ALIAS_SCHEMA
     assert [tuple(r) for r in df.collect()] == [
         (a, e, float(p)) for a, e, p in make_aliases(42)]
     assert load_aliases(spark, []).collect() == []
+    assert find_mentions("Hello big world", build_alias_pattern([])) == []
+    empty = canonicalize(load_aliases(spark, []))
+    assert detect_mentions(_stage4_inputs(spark)[1], empty).count() == 0
 
 
 # surface -> entity_id, and entity_id -> canonical_id (E5 folds onto E2)
@@ -349,6 +357,36 @@ def test_local_session_python_workers_run_under_pydaemon(spark):
 
     rows = spark.range(1, numPartitions=1).mapInArrow(fn, "f string").collect()
     assert [r.f.endswith("recrun_spark/pydaemon.py") for r in rows] == [True]
+
+
+def test_get_spark_keeps_the_master_given_to_spark_submit(tmp_path):
+    """Under ``spark-submit --master M``, ``get_spark`` runs on M: it sets
+    no local master of its own (that would pin a cluster job to one node)
+    and no pydaemon module (a --py-files zip is not on the daemon's
+    path)."""
+    import subprocess
+
+    import pyspark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from recrun_spark.session import get_spark\n"
+        "s = get_spark('probe', cpus=1)\n"
+        "conf = s.sparkContext.getConf()\n"
+        "print(s.sparkContext.master,"
+        " conf.get('spark.python.daemon.module', None))\n"
+        "s.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_MASTER"}
+    env["PYTHONPATH"] = root
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
+                          "spark-submit")
+    out = subprocess.run([submit, "--master", "local[2]",
+                          "--driver-memory", "512m", str(probe)],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "local[2] None"
 
 
 def test_salted_join_equivalence(spark):

@@ -5,8 +5,11 @@
 #        [--cpus N] [--force]
 #
 # Packages recrun_spark into a zip (the unit a real cluster ships to
-# executors) and submits recrun_spark/pipeline.py.  On a cluster, replace
+# executors) and submits tools/run_pipeline.py.  On a cluster, replace
 # --master with your cluster manager; everything else is identical.
+# Only the master, the driver heap and the zip are set here: the submitted
+# driver's session.get_spark keeps that master and sets every SQL option
+# (AQE, skew join, Arrow, shuffle partitions = max(2 * cpus, 8)).
 set -euo pipefail
 
 REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
@@ -34,9 +37,5 @@ PY
 exec /opt/spark/bin/spark-submit \
   --master "local[${CPUS}]" \
   --driver-memory "$HEAP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.shuffle.partitions=$((2 * CPUS)) \
   --py-files "$ZIP" \
   "$REPO/tools/run_pipeline.py" "$@"
