@@ -3158,13 +3158,14 @@ def events_sessions_stream(spark, sf_dir):
     import shutil
     import tempfile
 
-    import recrun_spark.streaming.sessions as sess_mod
     from recrun_spark.streaming.sessions import (prepare_ranged_events,
                                                  run_sessionize_available_now)
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     # Reuse the drained sink across oracle runs instead of leaking a fresh
     # /tmp dir + full replay per invocation.  The key covers the SOURCE
-    # identity (path+size+mtime) AND the sessionizer source code (same
+    # identity (path+size+mtime) AND every engine source file
+    # (pipeline._code_digest: the runner and each module it calls; same
     # staleness class _ensure_pkg content-hashes the package zip for) —
     # an edited operator rebuilds instead of silently replaying old
     # behavior.  The build happens in a private mkdtemp and is atomically
@@ -3174,7 +3175,7 @@ def events_sessions_stream(spark, sf_dir):
     st = os.stat(src_file)
     digest = hashlib.sha1(
         f"{src_file}:{st.st_size}:{st.st_mtime_ns}:3files".encode())
-    digest.update(open(sess_mod.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_sess_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):
@@ -3220,12 +3221,13 @@ def events_windowed_stream(spark, sf_dir):
 
     import recrun_spark.streaming.windows as swin
     from recrun_spark.streaming.sessions import prepare_ranged_events
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     src_file = f"{sf_dir}/events.parquet"
     st = os.stat(src_file)
     digest = hashlib.sha1(
         f"{src_file}:{st.st_size}:{st.st_mtime_ns}:3files:1h:10m".encode())
-    digest.update(open(swin.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_win_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):
@@ -3272,12 +3274,13 @@ def events_enriched_stream(spark, sf_dir):
 
     import recrun_spark.streaming.windows as swin
     from recrun_spark.streaming.sessions import prepare_ranged_events
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     src_file = f"{sf_dir}/events.parquet"
     st = os.stat(src_file)
     digest = hashlib.sha1(
         f"{src_file}:{st.st_size}:{st.st_mtime_ns}:enr:3f:1h:10m".encode())
-    digest.update(open(swin.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_enr_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):
@@ -3329,13 +3332,14 @@ def events_attribution_stream(spark, sf_dir):
 
     import recrun_spark.streaming.join as sjoin
     from recrun_spark.streaming.sessions import prepare_ranged_events
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     src_file = f"{sf_dir}/events.parquet"
     st = os.stat(src_file)
     digest = hashlib.sha1(
         f"{src_file}:{st.st_size}:{st.st_mtime_ns}:3files:1h:10m:attr"
         .encode())
-    digest.update(open(sjoin.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_attr_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):
@@ -3391,12 +3395,13 @@ def documents_dedup_stream(spark, sf_dir):
     import tempfile
 
     import recrun_spark.streaming.dedup as sdedup
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     src_file = f"{sf_dir}/documents.parquet"
     st = os.stat(src_file)
     digest = hashlib.sha1(
         f"{src_file}:{st.st_size}:{st.st_mtime_ns}:3files".encode())
-    digest.update(open(sdedup.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_dedup_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):
@@ -3437,12 +3442,13 @@ def kg_triples_stream(spark, sf_dir):
     import recrun_spark.streaming.kg as skg
     from recrun_spark.stage2 import load_aliases
     from recrun_spark.streaming.dedup import prepare_ranged_docs
+    from recrun_spark.pipeline import _code_digest
     _ensure_pkg(spark)
     corpus_path = _entry_corpus_path()
     st = os.stat(corpus_path)
     digest = hashlib.sha1(
         f"{corpus_path}:{st.st_size}:{st.st_mtime_ns}:3files".encode())
-    digest.update(open(skg.__file__, "rb").read())
+    digest.update(_code_digest().encode())
     work = os.path.join(tempfile.gettempdir(),
                         f"recrun_kg_stream_{digest.hexdigest()[:12]}")
     if not os.path.isdir(work):

@@ -84,12 +84,34 @@ def _pc():
     return pc
 
 
+# an unreadable document's extraction: score 0, nothing retained
+_EMPTY = {"title": "", "next_page": "", "text_length": 0, "score": 0,
+          "retained_spans": [], "text": "", "html": ""}
+
+
+def fold_batch(batch, settings: Settings, renders: bool):
+    """(doc_id, extraction record) per row of an Arrow batch of
+    (doc_id, spans), in row order: the fold of every map over documents.
+
+    A malformed span stream (unknown kind) raises ``ValueError`` in the
+    fold; that document gets the empty extraction, so one bad doc does not
+    fail a 10^12-doc job."""
+    doc_ids, kinds, texts, refs, offs, bounds = _unpack_spans_batch(batch)
+    for i in range(len(doc_ids)):
+        s, e = bounds[i], bounds[i + 1]
+        try:
+            rec = extract(zip(kinds[s:e], texts[s:e], refs[s:e], offs[s:e]),
+                          settings, renders=renders)
+        except ValueError:
+            rec = _EMPTY
+        yield doc_ids[i], rec
+
+
 def _extract_arrow_batches(batches, settings: Settings,
                            include_renders: bool, out_schema):
     import pyarrow as pa
     for batch in batches:
-        doc_ids, kinds, texts, refs, offs, bounds = _unpack_spans_batch(batch)
-        titles, nexts, tlens, scores = [], [], [], []
+        doc_ids, titles, nexts, tlens, scores = [], [], [], [], []
         art_texts, art_htmls = [], []
         # retained spans are assembled as FLAT columns + list offsets and
         # turned into a ListArray(StructArray) directly — the former
@@ -100,19 +122,8 @@ def _extract_arrow_batches(batches, settings: Settings,
         r_refs: list = []
         r_offs: list = []
         r_bounds = [0]
-        for i in range(len(doc_ids)):
-            s, e = bounds[i], bounds[i + 1]
-            try:
-                rec = extract(zip(kinds[s:e], texts[s:e], refs[s:e],
-                                  offs[s:e]),
-                              settings, renders=include_renders)
-            except ValueError:
-                # malformed span stream (unknown kind): per-document error
-                # isolation — one bad doc must not fail a 10^12-doc job;
-                # emit an empty extraction (score 0, nothing retained)
-                rec = {"title": "", "next_page": "", "text_length": 0,
-                       "score": 0, "retained_spans": [], "text": "",
-                       "html": ""}
+        for doc_id, rec in fold_batch(batch, settings, include_renders):
+            doc_ids.append(doc_id)
             titles.append(rec["title"])
             nexts.append(rec["next_page"])
             tlens.append(rec["text_length"])

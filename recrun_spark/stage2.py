@@ -7,13 +7,14 @@ Scale design:
 
 * **Mention detection stays a pure map** over extractions (Arrow
   ``mapInArrow``): the compiled longest-match alias automaton is built once
-  per worker from a Spark *broadcast* of the alias surfaces (not shipped
+  per worker from a Spark *broadcast* of the dictionary's surface ->
+  canonical entity dict, whose keys are the surfaces (not shipped
   per-batch, not a join against exploded token n-grams — at 10^12 docs an
   n-gram explode would shuffle orders of magnitude more rows than it keeps).
   Its partitioning follows its input, with no repartition in front: the
-  batch reads one stage-1 file per stage-1 task, and the stream's
-  micro-batch is one file, folded in one task (a repartition there cost a
-  shuffle, a job and 4 Python tasks per micro-batch).
+  batch reads one stage-1 file per stage-1 task.  (The stream does not
+  run this stage: its micro-batch folds, matches and links in one map,
+  ``streaming/kg.py``.)
 * **Entity-link scoring is a broadcast hash join** against the
   dictionary's best link per alias (``F.broadcast``) — all JVM-side.
 * **Skew**: the head alias (>30% of mentions) is harmless under a broadcast
@@ -37,15 +38,16 @@ from .linking import build_alias_pattern, find_mentions
 # (spark.python.worker.reuse), so the TrieMatcher is built once per
 # worker process instead of once per task.  One slot, keyed by
 # the dictionary DIGEST shipped with the task: every call uses one
-# dictionary, and a new digest replaces (frees) the old matcher.
+# dictionary, stage 2 and the stream share the slot, and a new digest
+# replaces (frees) the old matcher.
 _MATCHER: tuple = (None, None)  # (digest, pattern)
 
 
-def _cached_pattern(key: bytes, surfaces_tuple: tuple):
+def _cached_pattern(key: bytes, surfaces):
     global _MATCHER
     if _MATCHER[0] != key:
         _MATCHER = (None, None)  # drop the old matcher before building
-        _MATCHER = (key, build_alias_pattern(surfaces_tuple))
+        _MATCHER = (key, build_alias_pattern(surfaces))
     return _MATCHER[1]
 
 
@@ -70,7 +72,7 @@ def detect_mentions(extractions: DataFrame, dictionary) -> DataFrame:
     buffers; the alias automaton is compiled once per worker from the
     Spark broadcast."""
     spark = extractions.sparkSession
-    bc = spark.sparkContext.broadcast(dictionary.surfaces)
+    bc = spark.sparkContext.broadcast(dictionary.entity_of)
     key = dictionary.digest
     out_schema = to_arrow_schema(MENTION_SCHEMA)
 

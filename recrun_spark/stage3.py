@@ -3,15 +3,17 @@
 ``canonicalize`` turns aliases(alias, entity_id, prior) into a frozen
 ``Dictionary`` that stage 2, stage 4 and the three KG entry points share.
 The rows reach the driver once, as one sorted Arrow table, and every part
-of the Dictionary is built there from it, at every size: the surfaces, the
-digest, the best link per alias (an Arrow argmax) and the canonical map
-(``linking.canonical_map``, the golden generator's own function: same-as
+of the Dictionary is built there from it, at every size: the digest, the
+best link per alias (an Arrow argmax), the canonical map (the rule of
+``linking.canonical_map``, the golden generator's own function: same-as
 edges between entities sharing an alias with both priors >= STRONG_PRIOR,
 canonical id = min entity_id per component, entities with no same-as edge
-map to themselves).  Once the rows sit on the driver, a distributed CC
-only adds Spark jobs: a 1.05M-row dictionary compiles here with one job,
-the transfer.  A blank alias would match at every word boundary, so it
-is rejected here with null fields.
+map to themselves) and, from those two, each surface's canonical entity.
+The canonical map needs only the distinct entity ids and the strong rows,
+so no Python object is made per weak row.  Once the rows sit on the
+driver, a distributed CC only adds Spark jobs: a 1.05M-row dictionary
+compiles here with one job, the transfer.  A blank alias would match at
+every word boundary, so it is rejected here with null fields.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .fixtures.aliases import STRONG_PRIOR
-from .linking import canonical_map
+from .linking import min_label_components, same_as_edges
 
 CANONICAL_SCHEMA = StructType([
     StructField("entity_id", StringType()),
@@ -37,11 +39,13 @@ CANONICAL_SCHEMA = StructType([
 
 @dataclass(frozen=True, eq=False)
 class Dictionary:
-    """``surfaces``: sorted distinct aliases; ``digest``: ``_row_digest`` of
-    the sorted rows (matcher-cache key, resume fingerprint); ``links``:
-    best (alias, entity_id, prior) per alias, the side stage 2 broadcasts;
-    ``canonical``: (entity_id, canonical_id)."""
-    surfaces: tuple
+    """``entity_of``: surface -> canonical id of its best link, in surface
+    order; its keys are the surfaces the matcher is built from, and stage 2
+    and the stream broadcast this one object.  ``digest``: ``_row_digest``
+    of the sorted rows (matcher-cache key, resume fingerprint); ``links``:
+    best (alias, entity_id, prior) per alias, the side stage 2's link join
+    broadcasts; ``canonical``: (entity_id, canonical_id)."""
+    entity_of: dict
     digest: bytes
     links: DataFrame
     canonical: DataFrame
@@ -108,15 +112,31 @@ def canonicalize(aliases: DataFrame) -> Dictionary:
     if bad:
         raise ValueError("alias dictionary has " + ", ".join(bad))
     t = t.sort_by([(c, "ascending") for c in rows.columns])
-    surfaces = tuple(pc.unique(t.column("alias")).to_pylist())
+    # linking.canonical_map's rule from Arrow: every entity is a node, and
+    # only strong rows that share their alias can make a same-as edge
+    # (t is sorted by alias, so those rows are runs of >= 2)
+    strong = t.filter(pc.greater_equal(t.column("prior"), STRONG_PRIOR))
+    codes = strong.column("alias").combine_chunks().dictionary_encode() \
+        .indices.to_numpy()
+    alone = ((np.diff(codes, prepend=-1) != 0)
+             & (np.diff(codes, append=-1) != 0))
+    shared = strong.filter(pa.array(~alone))
+    entities = pc.unique(t.column("entity_id")).sort()
+    names = entities.to_pylist()
+    canon = min_label_components(names, same_as_edges(
+        zip(*(shared.column(c).to_pylist() for c in rows.columns))))
+    # each surface's canonical id, looked up by its best entity's position
+    # in ``entities``: no Python string per best row's entity id
+    roots = [canon[e] for e in names]
+    best = _best_links(t)
+    at = pc.index_in(best.column("entity_id"), value_set=entities)
+    entity_of = dict(zip(best.column("alias").to_pylist(),
+                         map(roots.__getitem__, at.to_numpy().tolist())))
     # both frames are local relations built from Arrow: no Spark job
     # to scan, broadcast or write them (a list-built frame is an RDD)
-    links = spark.createDataFrame(_best_links(t), rows.schema)
-    probe = list(zip(*(t.column(c).to_pylist() for c in rows.columns)))
-    ids = sorted(canonical_map(probe).items())
+    links = spark.createDataFrame(best, rows.schema)
     canonical = spark.createDataFrame(pa.table(
-        [pa.array([e for e, _ in ids], pa.string()),
-         pa.array([c for _, c in ids], pa.string())],
+        [entities, pa.array(roots, pa.string())],
         names=CANONICAL_SCHEMA.names), CANONICAL_SCHEMA)
-    return Dictionary(surfaces=surfaces, digest=_row_digest(t), links=links,
-                      canonical=canonical)
+    return Dictionary(entity_of=entity_of, digest=_row_digest(t),
+                      links=links, canonical=canonical)

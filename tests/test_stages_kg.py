@@ -78,20 +78,24 @@ def _random_dictionary(seed=3):
 
 def test_canonicalize_matches_golden(spark):
     """The Dictionary equals the single-node linking rules on the fixture
-    dictionary and a random one."""
+    dictionary and a random one with chained strong aliases: the canonical
+    map built from the distinct entities and the strong rows equals
+    ``canonical_map`` of all rows, and ``entity_of`` maps every surface,
+    in surface order, to the canonical id of its best link."""
     from recrun_spark import stage3
     from recrun_spark.fixtures.aliases import make_aliases
     from recrun_spark.linking import build_link_map, canonical_map
     from recrun_spark.stage2 import load_aliases
     for rows in (make_aliases(42), _random_dictionary()):
         d = stage3.canonicalize(load_aliases(spark, rows))
-        assert d.surfaces == tuple(sorted({r[0] for r in rows}))
+        canon, link = canonical_map(rows), build_link_map(rows)
         assert {r["entity_id"]: r["canonical_id"]
-                for r in d.canonical.collect()} == canonical_map(rows)
+                for r in d.canonical.collect()} == canon
+        assert list(d.entity_of) == sorted({r[0] for r in rows})
+        assert d.entity_of == {a: canon[e] for a, e in link.items()}
         links = d.links.collect()
-        assert len(links) == len(d.surfaces)
-        assert {r["alias"]: r["entity_id"]
-                for r in links} == build_link_map(rows)
+        assert len(links) == len(d.entity_of)
+        assert {r["alias"]: r["entity_id"] for r in links} == link
         assert d.links.columns == ["alias", "entity_id", "prior"]
 
 
@@ -117,14 +121,16 @@ def test_canonicalize_rejects_null_rows(spark):
 
 def test_stage_modules_import_without_pandas():
     """Python workers import ``recrun_spark.stage1`` and ``stage2`` for
-    every stage-1 and stage-2 task; neither needs pandas.  A subprocess,
-    because in-session workers are reused across tests."""
+    every stage-1 and stage-2 task, and ``stage4`` too for the stream's
+    one-pass map; none needs pandas.  A subprocess, because in-session
+    workers are reused across tests."""
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = ("import sys; sys.path.insert(0, sys.argv[1]); "
-            "import recrun_spark.stage1, recrun_spark.stage2; "
+            "import recrun_spark.stage1, recrun_spark.stage2, "
+            "recrun_spark.stage4; "
             "assert 'pandas' not in sys.modules")
     subprocess.run([sys.executable, "-c", code, root], check=True)
 
@@ -299,6 +305,43 @@ def test_job_counts_on_the_kg_path(spark, tmp_path):
         spark.conf.set(key, threshold)
     assert "BroadcastExchange" in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
+
+
+def test_incremental_call_is_one_pass(spark, tmp_path):
+    """One availableNow call on a fresh one-file input runs 2 Spark jobs:
+    canonicalize's transfer and the micro-batch's write.  The micro-batch
+    folds, matches, links and merges each document in one Python map, and
+    the JVM only expands the rules: no exchange, no broadcast join."""
+    import pyarrow.parquet as pq
+
+    from recrun_spark.fixtures.generator import corpus_to_arrow, make_corpus
+    from recrun_spark.stage2 import load_aliases
+    from recrun_spark.stage3 import canonicalize
+    from recrun_spark.stage4 import document_rows, expand_triples
+    from recrun_spark.streaming.kg import run_kg_available_now
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jl = jsc.statusStore().jobsList(None)
+        return {jl.apply(i).jobId() for i in range(jl.size())}
+
+    src = tmp_path / "in"
+    src.mkdir()
+    pq.write_table(corpus_to_arrow(make_corpus(20)), str(src / "a.parquet"))
+    aliases = load_aliases(spark)
+    before = job_ids()
+    run_kg_available_now(spark, str(src), str(tmp_path / "out"), aliases)
+    assert len(job_ids() - before) == 2
+
+    d = canonicalize(aliases)
+    trips = expand_triples(document_rows(
+        spark.read.parquet(str(src)), d.digest,
+        sc.broadcast(d.entity_of)))
+    plan = trips._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan  # BroadcastExchange included
 
 
 def _zip_module(path, source):

@@ -296,6 +296,36 @@ def test_incremental_kg_stream_equals_batch(spark, tmpdir_path):
     assert got80 == batch_triples(80)
 
 
+def test_incremental_kg_repeated_doc_id_in_one_file(spark, tmpdir_path):
+    """Two documents under one doc_id, plus a third, in one file: the
+    stream merges the repeated id within its task, as the batch pipeline
+    groups by doc_id, so both write the same 52 triples, each once.  (A
+    repeat across files is not merged by the stream: streaming/kg.py.)"""
+    import pyarrow.parquet as pq
+
+    from recrun_spark.fixtures.aliases import (all_surfaces, head_alias,
+                                               make_aliases)
+    from recrun_spark.fixtures.generator import corpus_to_arrow, make_doc
+    from recrun_spark.pipeline import run_pipeline
+    from recrun_spark.streaming.kg import run_kg_available_now
+
+    surfaces, head = all_surfaces(make_aliases()), head_alias()
+    docs = [(doc_id, make_doc(ix, 7, surfaces, head))
+            for doc_id, ix in (("dup", 11), ("dup", 12), ("one", 13))]
+    src = os.path.join(tmpdir_path, "docs_in")
+    os.makedirs(src)
+    pq.write_table(corpus_to_arrow(docs), os.path.join(src, "a.parquet"))
+    root = run_kg_available_now(spark, src, os.path.join(tmpdir_path, "kg"))
+    stream = spark.read.parquet(os.path.join(root, "batch=*")).select(
+        "subj", "pred", "obj", "doc_id")
+    assert stream.count() == stream.distinct().count() == 52
+    run_pipeline(spark, src, os.path.join(tmpdir_path, "batch"))
+    batch = spark.read.parquet(os.path.join(tmpdir_path, "batch",
+                                            "stage4_triples"))
+    assert ({tuple(r) for r in stream.collect()}
+            == {tuple(r) for r in batch.select(*stream.columns).collect()})
+
+
 def test_incremental_cms_stream_equals_batch(spark, tmpdir_path):
     """Streaming count-min sketch: 3 micro-batches of events sketched
     independently merge (cell-wise sum) into EXACTLY the batch sketch of

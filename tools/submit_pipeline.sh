@@ -13,11 +13,22 @@
 set -euo pipefail
 
 REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
-# unset env: size to this machine by the same rule as session.get_spark
+# unset env: size to this machine by the same rule as session.get_spark;
+# --cpus N (passed on to the pipeline, which sizes the session with it)
+# also sets the master's cores
 CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+args=("$@")
+for i in "${!args[@]}"; do
+  case "${args[$i]}" in
+    --cpus) CPUS="${args[$((i + 1))]}" ;;
+    --cpus=*) CPUS="${args[$i]#--cpus=}" ;;
+  esac
+done
 HEAP="${SPARK_GRAFT_DRIVER_MEM:-$(cd "$REPO" && python3 -c \
   'from recrun_spark.session import _machine_heap; print(_machine_heap())')}"
-ZIP="$(mktemp -d)/recrun_spark.zip"
+ZIP_DIR="$(mktemp -d)"
+trap 'rm -rf "$ZIP_DIR"' EXIT
+ZIP="$ZIP_DIR/recrun_spark.zip"
 
 (cd "$REPO" && python3 - "$ZIP" <<'PY'
 import os, sys, zipfile
@@ -34,7 +45,9 @@ print(f"packaged {zip_path}")
 PY
 )
 
-exec /opt/spark/bin/spark-submit \
+# no exec: the shell stays to remove the zip on exit, and exits with
+# spark-submit's status (set -e)
+/opt/spark/bin/spark-submit \
   --master "local[${CPUS}]" \
   --driver-memory "$HEAP" \
   --py-files "$ZIP" \
